@@ -39,15 +39,14 @@ def _num(col: Column, default: float = 0.0) -> Column:
     return F.coalesce(col.try_cast("double"), F.lit(default))
 
 
-def parse_cdc_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """JSON change-event strings → typed CryptoTradeEvent rows.
-
-    ``raw`` has one string column (default ``value``, the Kafka message
-    value). Works identically on batch and streaming DataFrames.
-    """
+def _unwrap_envelope(raw: DataFrame, value_col: str, *keep: str) -> DataFrame:
+    """Envelope unwrap shared by both parsers: op / before / after /
+    source_ts / cdc_ts from the payload wrapper, falling back to bare
+    fields, plus ``data`` — the row image (``before`` for deletes,
+    ``after`` otherwise). ``keep`` columns of ``raw`` ride along first."""
     parsed = raw.withColumn("_env", F.from_json(F.col(value_col), ENVELOPE_SCHEMA))
-    # Envelope unwrap: prefer the payload wrapper, fall back to bare fields.
     p = parsed.select(
+        *keep,
         F.coalesce(F.col("_env.payload.op"), F.col("_env.op")).alias("op"),
         F.coalesce(F.col("_env.payload.before"), F.col("_env.before")).alias("before"),
         F.coalesce(F.col("_env.payload.after"), F.col("_env.after")).alias("after"),
@@ -56,9 +55,17 @@ def parse_cdc_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
         ),
         F.coalesce(F.col("_env.payload.ts_ms"), F.col("_env.ts_ms")).alias("cdc_ts"),
     )
-    # Delete events carry the row image in `before`; everything else in `after`.
     data = F.when(F.col("op") == "d", F.col("before")).otherwise(F.col("after"))
-    p = p.withColumn("data", data)
+    return p.withColumn("data", data)
+
+
+def parse_cdc_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
+    """JSON change-event strings → typed CryptoTradeEvent rows.
+
+    ``raw`` has one string column (default ``value``, the Kafka message
+    value). Works identically on batch and streaming DataFrames.
+    """
+    p = _unwrap_envelope(raw, value_col)
     # Tombstones parse to all-null envelopes; malformed JSON yields null struct.
     p = p.filter(F.col("op").isNotNull() & F.col("data").isNotNull())
     return p.select(
@@ -89,19 +96,7 @@ def parse_cdc_events_with_audit(raw: DataFrame, value_col: str = "value") -> Dat
     row) for pipelines that must account for every message. Filter
     ``_reject_reason IS NULL`` to recover the strict parser's output.
     """
-    parsed = raw.withColumn("_env", F.from_json(F.col(value_col), ENVELOPE_SCHEMA))
-    p = parsed.select(
-        F.col(value_col),
-        F.coalesce(F.col("_env.payload.op"), F.col("_env.op")).alias("op"),
-        F.coalesce(F.col("_env.payload.before"), F.col("_env.before")).alias("before"),
-        F.coalesce(F.col("_env.payload.after"), F.col("_env.after")).alias("after"),
-        F.coalesce(F.col("_env.payload.source.ts_ms"), F.col("_env.source.ts_ms")).alias(
-            "source_ts"
-        ),
-        F.coalesce(F.col("_env.payload.ts_ms"), F.col("_env.ts_ms")).alias("cdc_ts"),
-    )
-    data = F.when(F.col("op") == "d", F.col("before")).otherwise(F.col("after"))
-    p = p.withColumn("data", data)
+    p = _unwrap_envelope(raw, value_col, value_col)
     reason = (
         F.when(F.col(value_col).isNull(), F.lit("tombstone"))
         .when(F.col("op").isNull() & F.col("data").isNull(), F.lit("malformed_json"))

@@ -40,6 +40,7 @@ a reader defines pushFilters while the flag is off), which
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -379,8 +380,8 @@ class CdcEnvelopeWriter(DataSourceArrowWriter):
                 pass
 
 
-_REGISTER_LOCK = None  # created lazily to keep module import light
-_REGISTERED_SESSIONS: dict = {}
+_REGISTER_LOCK = threading.Lock()
+_REGISTERED_ATTR = "_cdc_envelope_registered"
 
 
 def register(spark) -> None:
@@ -389,19 +390,14 @@ def register(spark) -> None:
     Registration pickles the DataSource class across py4j and swaps the
     session's lookup entry; doing that concurrently with another
     thread's ``lookupDataSource`` (the repo-wide plan sweep builds
-    queries from a thread pool — round 14) intermittently fails the
-    in-flight ``save()``. A per-session flag plus a lock makes repeat
-    calls free and first calls race-safe."""
-    global _REGISTER_LOCK
-    if _REGISTER_LOCK is None:
-        import threading
-
-        _REGISTER_LOCK = threading.Lock()
-    sid = id(spark)
-    if _REGISTERED_SESSIONS.get(sid):
+    queries from a thread pool) intermittently fails the
+    in-flight ``save()``. A flag on the session object itself (not its
+    ``id``, which a later session can reuse) plus a module-level lock
+    makes repeat calls free and first calls race-safe."""
+    if getattr(spark, _REGISTERED_ATTR, False):
         return
     with _REGISTER_LOCK:
-        if _REGISTERED_SESSIONS.get(sid):
+        if getattr(spark, _REGISTERED_ATTR, False):
             return
         spark.dataSource.register(CdcEnvelopeDataSource)
-        _REGISTERED_SESSIONS[sid] = True
+        setattr(spark, _REGISTERED_ATTR, True)

@@ -7,9 +7,11 @@ The reference reads Kafka once and forwards to all three consumers
 inside one Flink DAG; three independent Spark ``writeStream``s would
 re-read the source, so raw + agg-partials go through a single
 ``foreachBatch`` that persists each micro-batch and writes both sinks
-(read-once parity — SURVEY.md §4 row 1). The stateful alert stream
-needs its own query (state lives in the streaming runtime, not in
-foreachBatch).
+(read-once parity — SURVEY.md §4 row 1). The window aggregate is the
+one definition in operators/window_agg.py: each micro-batch appends
+its ``trade_partials``, and ``read_merged_trade_agg`` merges and
+finalizes them at read. The stateful alert stream needs its own query
+(state lives in the streaming runtime, not in foreachBatch).
 
 Sinks are Parquet directories (the ClickHouse-tables analog,
 clickhouse/init.sql:7-75), month-partitioned like the reference's
@@ -26,7 +28,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_realtime_pipeline_spark.cdc.envelope import parse_cdc_events
-from cdc_realtime_pipeline_spark.operators.window_agg import trade_window_agg
+from cdc_realtime_pipeline_spark.operators.window_agg import (
+    finalize_trade_agg,
+    merge_trade_partials,
+    trade_partials,
+)
 from cdc_realtime_pipeline_spark.sources.cdc_file_source import read_cdc_stream
 from cdc_realtime_pipeline_spark.streaming.anomaly_stateful import apply_anomaly_detector
 
@@ -81,35 +87,19 @@ def run_cdc_fanout(
                 .partitionBy("month")
                 .parquet(raw_dir)
             )
-            # Sink 2: per-batch window-aggregate *partials* (Stream 1).
-            # Partials are re-mergeable at read (sum/min/max/count are
-            # associative; avg carried as sum+count) — the
-            # AggregatingMergeTree pattern without requiring stream state.
-            partials = (
-                batch_df.filter(F.col("op").isNotNull())
-                .groupBy(F.window("ts", "5 minutes").alias("w"), "market")
-                .agg(
-                    F.count("*").alias("trade_count"),
-                    F.sum(F.when(F.col("ask_bid") == "BID", 1).otherwise(0)).alias("bid_count"),
-                    F.sum("trade_amount").alias("total_amount"),
-                    F.sum("trade_volume").alias("total_volume"),
-                    F.sum("trade_price").alias("price_sum"),
-                    F.min("trade_price").alias("min_price"),
-                    F.max("trade_price").alias("max_price"),
-                )
-                .select(
-                    F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "market",
-                    "trade_count",
-                    "bid_count",
-                    "total_amount",
-                    "total_volume",
-                    "price_sum",
-                    "min_price",
-                    "max_price",
-                )
+            # Sink 2: per-batch window-aggregate *partials* (Stream 1),
+            # re-mergeable at read — the AggregatingMergeTree pattern
+            # without requiring stream state. parse_cdc_events already
+            # dropped rows without an op.
+            trades = batch_df.select(
+                "ts",
+                "market",
+                F.col("trade_price").alias("price"),
+                F.col("trade_volume").alias("volume"),
+                F.col("trade_amount").alias("amount"),
+                (F.col("ask_bid") == "BID").alias("is_bid"),
             )
+            partials = trade_partials(trades)
             partials.write.mode("append").parquet(agg_dir)
         finally:
             batch_df.unpersist()
@@ -185,28 +175,5 @@ def read_merged_trade_agg(spark: SparkSession, out_base: str) -> DataFrame:
     """Merge-at-read of the fan-out's window-agg partials → final
     trade_aggregations relation (FIXTURES.md §A3 schema)."""
     partials = spark.read.parquet(os.path.join(out_base, "trade_agg_partials"))
-    merged = partials.groupBy("window_start", "window_end", "market").agg(
-        F.sum("trade_count").alias("trade_count"),
-        F.sum("bid_count").alias("bid_count"),
-        F.sum("total_amount").alias("total_amount"),
-        F.sum("total_volume").alias("total_volume"),
-        F.sum("price_sum").alias("price_sum"),
-        F.min("min_price").alias("min_price"),
-        F.max("max_price").alias("max_price"),
-    )
-    return merged.select(
-        "market",
-        "window_start",
-        "window_end",
-        "trade_count",
-        "bid_count",
-        (F.col("trade_count") - F.col("bid_count")).alias("ask_count"),
-        "total_amount",
-        "total_volume",
-        (F.col("price_sum") / F.col("trade_count")).alias("avg_price"),
-        "min_price",
-        "max_price",
-        F.when(F.col("total_volume") > 0, F.col("total_amount") / F.col("total_volume"))
-        .otherwise(F.lit(0.0))
-        .alias("vwap"),
-    )
+    keys = ("market", "window_start", "window_end")
+    return finalize_trade_agg(merge_trade_partials(partials, *keys), *keys)

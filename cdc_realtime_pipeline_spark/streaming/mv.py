@@ -18,6 +18,7 @@ upsert instead.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,17 +60,28 @@ def start_latency_mv(
     return q
 
 
+def _merge_latency(partials: DataFrame) -> DataFrame:
+    """Fold partials to one partial row per minute (sum/cnt add,
+    min/max fold) — shared by merge-at-read and compaction."""
+    return partials.groupBy("minute").agg(
+        F.sum("sum_latency").alias("sum_latency"),
+        F.sum("cnt").alias("cnt"),
+        F.min("min_latency").alias("min_latency"),
+        F.max("max_latency").alias("max_latency"),
+    )
+
+
 def read_latency_mv(spark: SparkSession, mv_dir: str) -> DataFrame:
     """Merge-at-read: finalize avg/min/max/count from partials
     (≙ avgMerge/minMerge/maxMerge/countMerge)."""
-    partials = spark.read.parquet(mv_dir)
     return (
-        partials.groupBy("minute")
-        .agg(
-            (F.sum("sum_latency") / F.sum("cnt")).alias("avg_latency"),
-            F.min("min_latency").alias("min_latency"),
-            F.max("max_latency").alias("max_latency"),
-            F.sum("cnt").alias("n"),
+        _merge_latency(spark.read.parquet(mv_dir))
+        .select(
+            "minute",
+            (F.col("sum_latency") / F.col("cnt")).alias("avg_latency"),
+            "min_latency",
+            "max_latency",
+            F.col("cnt").alias("n"),
         )
         .orderBy("minute")
     )
@@ -77,17 +89,19 @@ def read_latency_mv(spark: SparkSession, mv_dir: str) -> DataFrame:
 
 def compact_latency_mv(spark: SparkSession, mv_dir: str) -> None:
     """Fold accumulated partials into one row per minute (the merge the
-    MergeTree engine does in the background). Atomic via staged rewrite."""
-    partials = spark.read.parquet(mv_dir)
-    compacted = partials.groupBy("minute").agg(
-        F.sum("sum_latency").alias("sum_latency"),
-        F.sum("cnt").alias("cnt"),
-        F.min("min_latency").alias("min_latency"),
-        F.max("max_latency").alias("max_latency"),
-    )
-    tmp = mv_dir.rstrip("/") + "__compact_tmp"
-    compacted.write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    shutil.rmtree(mv_dir)
-    os.rename(tmp, mv_dir)
+    MergeTree engine does in the background). Staged rewrite: the
+    compacted table is written aside, the live directory is renamed
+    away, the staged one renamed into place, and the old copy deleted
+    last — a failed swap restores the old directory, so readers never
+    lose partials."""
+    base = mv_dir.rstrip("/")
+    tmp, old = base + "__compact_tmp", base + "__compact_old"
+    _merge_latency(spark.read.parquet(base)).write.mode("overwrite").parquet(tmp)
+    shutil.rmtree(old, ignore_errors=True)  # left by an interrupted swap
+    os.rename(base, old)
+    try:
+        os.rename(tmp, base)
+    except BaseException:
+        os.rename(old, base)
+        raise
+    shutil.rmtree(old)

@@ -36,6 +36,13 @@ from cdc_realtime_pipeline_spark.operators import dq as _dq_oracles
 from cdc_realtime_pipeline_spark.operators import inference as _inf_oracles
 from cdc_realtime_pipeline_spark.operators import temporal as _tmp_oracles
 from cdc_realtime_pipeline_spark.operators import timeseries as _ts_oracles
+from cdc_realtime_pipeline_spark.operators.window_agg import (
+    EVENTS_WINDOW_AGG_5M_SQL,
+    events_as_trades,
+    finalize_trade_agg,
+    round_trade_agg,
+    trade_partials,
+)
 from cdc_realtime_pipeline_spark.sources.cdc_file_source import write_cdc_json_files
 from cdc_realtime_pipeline_spark.streaming.anomaly_stateful import apply_anomaly_detector
 
@@ -139,10 +146,10 @@ def _memory_sink(df: DataFrame, output_mode: str, src=None) -> DataFrame:
 def stream_window_agg_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The A1-A3 window aggregate under Structured Streaming.
 
-    Same expression as the batch ``window_agg_5m`` (one groupBy over
+    Same partials as the batch ``window_agg_5m`` (one groupBy over
     ``window(ts, '5 min')``), fed by a parquet file *stream*, complete
-    output mode — the result must match the batch/DuckDB answer
-    exactly, which is this query's oracle.
+    output mode, finalized from the sink — the result must match the
+    batch/DuckDB answer exactly, which is this query's oracle.
     """
     events_stream = convert_ns_timestamps(
         spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
@@ -150,50 +157,9 @@ def stream_window_agg_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ev = events_stream.select(
-        "ts",
-        F.col("user_id").alias("market"),
-        F.col("value").alias("price"),
-        F.get_json_object("props", "$.k").cast("double").alias("volume"),
-        F.col("event_type").isin("click", "purchase").alias("is_bid"),
-    ).withColumn("amount", F.col("price") * F.col("volume"))
-    bid = F.sum(F.when(F.col("is_bid"), 1).otherwise(0))
-    agg = (
-        ev.groupBy(F.window("ts", "5 minutes").alias("w"), "market")
-        .agg(
-            F.count("*").alias("trade_count"),
-            bid.alias("bid_count"),
-            (F.count("*") - bid).alias("ask_count"),
-            F.sum("amount").alias("total_amount"),
-            F.sum("volume").alias("total_volume"),
-            F.avg("price").alias("avg_price"),
-            F.min("price").alias("min_price"),
-            F.max("price").alias("max_price"),
-        )
-    )
+    agg = trade_partials(events_as_trades(events_stream))
     res = _memory_sink(agg, "complete", src=os.path.join(sf_dir, "events.parquet"))
-    # same tie discipline as the batch finalize: rounded-sum ratio +
-    # shared 1e-9 nudge (events_window_agg_5m)
-    ra, rv = F.round(F.col("total_amount") + 1e-9, 4), F.round(
-        F.col("total_volume") + 1e-9, 4
-    )
-    return res.select(
-        "market",
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        "trade_count",
-        "bid_count",
-        "ask_count",
-        ra.alias("total_amount"),
-        rv.alias("total_volume"),
-        F.round(F.coalesce("avg_price", F.lit(0.0)) + 1e-9, 4).alias("avg_price"),
-        F.round(F.coalesce("min_price", F.lit(0.0)) + 1e-9, 4).alias("min_price"),
-        F.round(F.coalesce("max_price", F.lit(0.0)) + 1e-9, 4).alias("max_price"),
-        F.round(
-            F.when(rv > 0, ra / rv).otherwise(0.0) + 1e-9,
-            4,
-        ).alias("vwap"),
-    )
+    return round_trade_agg(finalize_trade_agg(res, "market", "window_start", "window_end"))
 
 
 def stream_cdc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -629,28 +595,7 @@ def stream_merged_trade_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(base, "ckpt"),
         synchronous=True,
     )
-    merged = read_merged_trade_agg(spark, os.path.join(base, "out"))
-    # rounded-sum ratio + shared 1e-9 nudge (same tie discipline as
-    # the batch window-agg finalize)
-    ra, rv = F.round(F.col("total_amount") + 1e-9, 4), F.round(
-        F.col("total_volume") + 1e-9, 4
-    )
-    return merged.select(
-        "market",
-        "window_start",
-        "window_end",
-        "trade_count",
-        "bid_count",
-        "ask_count",
-        ra.alias("total_amount"),
-        rv.alias("total_volume"),
-        F.round(F.col("avg_price") + 1e-9, 4).alias("avg_price"),
-        F.round(F.col("min_price") + 1e-9, 4).alias("min_price"),
-        F.round(F.col("max_price") + 1e-9, 4).alias("max_price"),
-        F.round(
-            F.when(rv > 0, ra / rv).otherwise(0.0) + 1e-9, 4
-        ).alias("vwap"),
-    )
+    return round_trade_agg(read_merged_trade_agg(spark, os.path.join(base, "out")))
 
 
 STREAM_MERGED_TRADE_AGG_SQL = """
@@ -854,9 +799,6 @@ from cdc_realtime_pipeline_spark.operators.cdc_ops import (  # noqa: E402
 from cdc_realtime_pipeline_spark.operators.extended import (  # noqa: E402
     CEP_FUNNEL_SEQUENCE_SQL,
     SESSIONIZE_NATIVE_SQL,
-)
-from cdc_realtime_pipeline_spark.operators.window_agg import (  # noqa: E402
-    EVENTS_WINDOW_AGG_5M_SQL,
 )
 
 # Oracle for stream_docs_quality_gate: batch equivalent of the

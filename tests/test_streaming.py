@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_realtime_pipeline_spark.cdc.envelope import (
@@ -221,39 +222,6 @@ def test_corrupt_records_mid_stream_do_not_kill_the_query(spark, sf_dir):
     assert res.count() == n_events  # good rows all parsed, bad rows dropped
 
 
-def test_tws_detector_matches_applyinpandas_detector(spark, sf_dir):
-    # the transformWithStateInPandas implementation must emit exactly
-    # the alerts the applyInPandasWithState one does
-    import pytest
-
-    from cdc_realtime_pipeline_spark.streaming.anomaly_tws import (
-        apply_anomaly_detector_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("transformWithStateInPandas needs google.protobuf (absent here)")
-    from cdc_realtime_pipeline_spark.streaming.stream_queries import _memory_sink
-
-    stream_dir, _ = _make_stream(spark, sf_dir)
-
-    def run(builder):
-        parsed = parse_cdc_events(
-            spark.readStream.format("text").load(stream_dir)
-        )
-        out = _memory_sink(builder(parsed), "append")
-        return {
-            (r["market"], r["alert_type"], r["trade_id"])
-            for r in out.select("market", "alert_type", "trade_id").collect()
-        }
-
-    from cdc_realtime_pipeline_spark.streaming.anomaly_stateful import (
-        apply_anomaly_detector,
-    )
-
-    assert run(apply_anomaly_detector_tws) == run(apply_anomaly_detector)
-
-
 def test_latency_mv_merge_and_compact(spark, sf_dir):
     stream_dir, _ = _make_stream(spark, sf_dir)
     mv_dir = tempfile.mkdtemp(prefix="mv_") + "/t"
@@ -279,6 +247,43 @@ def test_latency_mv_merge_and_compact(spark, sf_dir):
     compact_latency_mv(spark, mv_dir)
     after = {r["minute"]: r.asDict() for r in read_latency_mv(spark, mv_dir).collect()}
     assert before == after
+
+
+@pytest.mark.parametrize("fail_on", ["every_rename", "swap_in_rename"])
+def test_latency_mv_compaction_failure_keeps_partials(spark, monkeypatch, fail_on):
+    # a rename failing mid-compaction must leave the MV readable with
+    # its pre-compaction answer: first with every rename refused, then
+    # with only the staged-table swap refused (the restore path)
+    import datetime
+
+    m0 = datetime.datetime(2024, 1, 1, 9, 0)
+    m1 = m0 + datetime.timedelta(minutes=1)
+    mv_dir = tempfile.mkdtemp(prefix="mv_fail_") + "/t"
+    schema = "minute timestamp, sum_latency long, cnt long, min_latency long, max_latency long"
+    for rows in ([(m0, 10, 2, 4, 6)], [(m0, 3, 1, 3, 3), (m1, 5, 1, 5, 5)]):
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(mv_dir)
+
+    def read():
+        return {r["minute"]: r.asDict() for r in read_latency_mv(spark, mv_dir).collect()}
+
+    before = read()
+    real_rename = os.rename
+
+    def failing_rename(src, dst, *args, **kwargs):
+        if fail_on == "every_rename" or str(src).endswith("__compact_tmp"):
+            raise OSError("injected rename failure")
+        return real_rename(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="injected"):
+        compact_latency_mv(spark, mv_dir)
+    monkeypatch.undo()
+    assert read() == before
+
+    # the next compaction succeeds and folds to one partial per minute
+    compact_latency_mv(spark, mv_dir)
+    assert read() == before
+    assert spark.read.parquet(mv_dir).count() == 2
 
 
 def test_fanout_ingest_time_mode(spark, sf_dir):
