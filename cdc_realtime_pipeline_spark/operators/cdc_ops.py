@@ -6,12 +6,25 @@ data: events → Debezium-shaped JSON strings (inserts + deletes) →
 expected output directly from ``events``, so the parser's envelope
 unwrap, op routing (delete reads ``before``), decimal-string casts and
 latency derivation are all verified against an independent engine.
+
+The change log and its two read-side views are defined once here and
+work on batch and streaming-sourced frames alike:
+
+* ``roundtrip_columns`` — the parsed-row projection ``CDC_ROUNDTRIP_SQL``
+  checks (every round-trip leg: batch, text stream, Python DataSource);
+* ``update_log_events`` — the events behind the update log: every 5th
+  event replayed one hour later at double price;
+* ``current_state`` — latest version per key, deletes dropped (the
+  MERGE-INTO table; ``cdc_apply_changes``, ``stream_cdc_apply``);
+* ``versions`` — SCD2 validity intervals per key, deletes dropped
+  (``cdc_scd2_history``, ``pit_join_versions``, ``stream_cdc_scd2``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from cdc_realtime_pipeline_spark.cdc.envelope import (
     parse_cdc_events,
@@ -28,10 +41,11 @@ def _parallel_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events").repartition(n)
 
 
-def cdc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _parallel_events(spark, sf_dir)
-    raw = synthesize_cdc_json_from_events(events)
-    parsed = parse_cdc_events(raw)
+def roundtrip_columns(parsed: DataFrame) -> DataFrame:
+    """The parsed change rows as ``CDC_ROUNDTRIP_SQL`` states them:
+    10 columns, the three decimal-string amounts rounded to 4 places.
+    No final sort: the compare is order-insensitive and global sorts
+    don't scale."""
     return parsed.select(
         "trade_id",
         "market",
@@ -43,7 +57,78 @@ def cdc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sequential_id",
         "op",
         "cdc_latency_ms",
-    )  # no final sort: order-insensitive compare; global sorts don't scale
+    )
+
+
+def update_log_events(events: DataFrame) -> DataFrame:
+    """The events behind the update log: every event once, plus a
+    second version of every 5th one — doubled price, one hour later.
+    Synthesize (row-wise) and parse it to get the change log whose
+    current state must surface the second version."""
+    return events.unionAll(
+        events.filter(F.col("event_id") % 5 == 0)
+        .withColumn("value", F.col("value") * 2)
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
+    )
+
+
+def current_state(log: DataFrame) -> DataFrame:
+    """The current-rows table a parsed change log describes: per key,
+    the latest change by (cdc_ts, sequential_id); a final delete
+    removes the key. Columns and rounding as ``CDC_APPLY_CHANGES_SQL``.
+
+    One hash-aggregate shuffle on the key: ``max_by`` over the order
+    struct reduces map-side (guide §2.3 "aggregate before you
+    shuffle"), so the exchange carries one partially-reduced row per
+    (map task, key), not every log row, and no sort is needed. The
+    generator guarantees one op per key per (cdc_ts, seq) position, so
+    the winner is unique — the row a rank-1 window would select."""
+    latest = log.groupBy("trade_id").agg(
+        F.max_by(
+            F.struct("op", "market", "trade_price", "ask_bid", "upbit_timestamp"),
+            F.struct("cdc_ts", "sequential_id"),
+        ).alias("w")
+    )
+    return latest.filter(F.col("w.op") != "d").select(
+        "trade_id",
+        F.col("w.market").alias("market"),
+        F.round("w.trade_price", 4).alias("trade_price"),
+        F.col("w.ask_bid").alias("ask_bid"),
+        F.col("w.upbit_timestamp").alias("upbit_timestamp"),
+    )
+
+
+def versions(log: DataFrame) -> DataFrame:
+    """SCD2 version rows of a parsed change log: every non-delete change
+    is a version valid from its cdc_ts until the key's next change
+    (``valid_to_ms`` NULL = still current; a trailing delete closes the
+    last interval, so a deleted key has no current version). Columns
+    and rounding as ``CDC_SCD2_HISTORY_SQL``. One shuffle on the key
+    (lead window); deletes are dropped after the window, which still
+    sees them."""
+    w = Window.partitionBy("trade_id").orderBy("cdc_ts", "sequential_id")
+    return (
+        log.withColumn("valid_to_ms", F.lead("cdc_ts").over(w))
+        .filter(F.col("op") != "d")
+        .select(
+            "trade_id",
+            "market",
+            F.round("trade_price", 4).alias("trade_price"),
+            F.col("cdc_ts").alias("valid_from_ms"),
+            "valid_to_ms",
+            F.col("valid_to_ms").isNull().alias("is_current"),
+        )
+    )
+
+
+def _update_log(events: DataFrame) -> DataFrame:
+    """The parsed update log of ``events``."""
+    return parse_cdc_events(synthesize_cdc_json_from_events(update_log_events(events)))
+
+
+def cdc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = _parallel_events(spark, sf_dir)
+    return roundtrip_columns(parse_cdc_events(synthesize_cdc_json_from_events(events)))
 
 
 # Mirrors synthesize_cdc_json_from_events' field mapping exactly:
@@ -96,45 +181,10 @@ def cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     binlog describes): per primary key, take the latest change by
     (cdc_ts, sequential_id); a final ``op='d'`` removes the row. On a
     Delta/Iceberg deployment this is MERGE INTO; here it's the engine-
-    level emulation — latest-version-per-key via ``max_by`` over the
-    (cdc_ts, sequential_id) order struct, drop deletes.
-
-    One shuffle on the key — and since round 13 it is a HASH AGGREGATE
-    shuffle, not a rank window: ``max_by`` reduces map-side (guide
-    §2.3 "aggregate before you shuffle"), so the exchange carries one
-    partially-reduced row per (map task, key) instead of every log
-    row, and the two window sorts disappear. The generator guarantees
-    one op per key per (cdc_ts, seq) position, so the winner is
-    unique — same row the rank-1 window selected. To exercise
-    updates, the synthesized log replays every 5th event a second
-    time with a bumped cdc_ts and doubled price — apply must surface
-    the *second* version.
+    level emulation, ``current_state`` over the update log — apply
+    must surface the *second* version of every 5th key.
     """
-    events = _parallel_events(spark, sf_dir)
-    base = synthesize_cdc_json_from_events(events)
-    # second version of every 5th row: doubled value, later cdc_ts
-    updates = synthesize_cdc_json_from_events(
-        events.filter(F.col("event_id") % 5 == 0)
-        .withColumn("value", F.col("value") * 2)
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-    )
-    log = parse_cdc_events(base.unionAll(updates))
-    latest = log.groupBy("trade_id").agg(
-        F.max_by(
-            F.struct("op", "market", "trade_price", "ask_bid", "upbit_timestamp"),
-            F.struct("cdc_ts", "sequential_id"),
-        ).alias("w")
-    )
-    return (
-        latest.filter(F.col("w.op") != "d")
-        .select(
-            "trade_id",
-            F.col("w.market").alias("market"),
-            F.round("w.trade_price", 4).alias("trade_price"),
-            F.col("w.ask_bid").alias("ask_bid"),
-            F.col("w.upbit_timestamp").alias("upbit_timestamp"),
-        )
-    )
+    return current_state(_update_log(_parallel_events(spark, sf_dir)))
 
 
 # the oracle reconstructs apply semantics directly: non-error events
@@ -161,32 +211,9 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     story next to ``cdc_apply_changes``' latest-state view: the
     dimension-history warehouses keep.
 
-    Same synthesized log as apply (base ∪ doubled-price replay of
-    every 5th event at +1 h). One shuffle on the key (lead window).
+    ``versions`` over the same update log as apply.
     """
-    events = _parallel_events(spark, sf_dir)
-    base = synthesize_cdc_json_from_events(events)
-    updates = synthesize_cdc_json_from_events(
-        events.filter(F.col("event_id") % 5 == 0)
-        .withColumn("value", F.col("value") * 2)
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-    )
-    log = parse_cdc_events(base.unionAll(updates))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("trade_id").orderBy("cdc_ts", "sequential_id")
-    versions = log.withColumn("valid_to_ms", F.lead("cdc_ts").over(w))
-    return (
-        versions.filter(F.col("op") != "d")
-        .select(
-            "trade_id",
-            "market",
-            F.round("trade_price", 4).alias("trade_price"),
-            F.col("cdc_ts").alias("valid_from_ms"),
-            "valid_to_ms",
-            F.col("valid_to_ms").isNull().alias("is_current"),
-        )
-    )
+    return versions(_update_log(_parallel_events(spark, sf_dir)))
 
 
 # log reconstruction mirrors synthesize + the apply updates: cdc_ts =
@@ -236,31 +263,17 @@ def pit_join_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit aggregate: matches, current-version matches, price checksum.
     """
     events = _parallel_events(spark, sf_dir)
-    base = synthesize_cdc_json_from_events(events)
-    updates = synthesize_cdc_json_from_events(
-        events.filter(F.col("event_id") % 5 == 0)
-        .withColumn("value", F.col("value") * 2)
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-    )
-    log = parse_cdc_events(base.unionAll(updates))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("trade_id").orderBy("cdc_ts", "sequential_id")
-    versions = (
-        log.withColumn("valid_to_ms", F.lead("cdc_ts").over(w))
-        .filter(F.col("op") != "d")
-        .select(
-            "trade_id",
-            F.round("trade_price", 4).alias("v_price"),
-            F.col("cdc_ts").alias("valid_from_ms"),
-            "valid_to_ms",
-        )
+    ver = versions(_update_log(events)).select(
+        "trade_id",
+        F.col("trade_price").alias("v_price"),
+        "valid_from_ms",
+        "valid_to_ms",
     )
     queries = events.select(
         F.col("event_id").alias("trade_id"),
         (F.unix_millis("ts") + 1_800_000).alias("q_ms"),
     )
-    pit = queries.join(versions, "trade_id").filter(
+    pit = queries.join(ver, "trade_id").filter(
         (F.col("valid_from_ms") <= F.col("q_ms"))
         & (F.col("q_ms") < F.coalesce(F.col("valid_to_ms"), F.lit(2**62)))
     )

@@ -10,6 +10,7 @@ of driver-side collects, so the plans carry over unchanged.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -175,6 +176,10 @@ def release_caches() -> int:
 # by construction: one entry per slot, keyed by (session, sf_dir) —
 # a new session or a different fixture dir releases and rebuilds.
 _MEMOIZED: dict[str, tuple[int, str, object]] = {}
+# serializes memo_persist's check-build-store, so threads racing on a
+# cold slot build it once; re-entrant because a build may read
+# another memo
+_MEMO_LOCK = threading.RLock()
 
 # Scalar/side caches that ride the same static-fixture assumption as
 # the memos (e.g. similarity's embeddings-count cache feeding the
@@ -205,19 +210,20 @@ def memo_persist(slot: str, spark, sf_dir: str, build):
     REWRITES a fixture dir mid-session must call release_memos()
     afterwards or memoized shingle/candidate/PQ tables will serve
     stale results."""
-    cur = _MEMOIZED.get(slot)
     sid = id(spark)
-    if cur is not None and cur[0] == sid and cur[1] == sf_dir:
-        return cur[2]
-    if cur is not None:
-        try:
-            cur[2].unpersist()
-        except Exception:  # previous session already stopped
-            pass
-    df = build()
-    df.persist()
-    _MEMOIZED[slot] = (sid, sf_dir, df)
-    return df
+    with _MEMO_LOCK:
+        cur = _MEMOIZED.get(slot)
+        if cur is not None and cur[0] == sid and cur[1] == sf_dir:
+            return cur[2]
+        if cur is not None:
+            try:
+                cur[2].unpersist()
+            except Exception:  # previous session already stopped
+                pass
+        df = build()
+        df.persist()
+        _MEMOIZED[slot] = (sid, sf_dir, df)
+        return df
 
 
 def release_memos() -> int:

@@ -12,8 +12,6 @@ code. Swapping in Kafka is a two-line change:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -26,44 +24,12 @@ def write_cdc_json_files(df_json: DataFrame, out_dir: str, n_files: int = 4) -> 
     return out_dir
 
 
-def read_cdc_stream(
-    spark: SparkSession, in_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def read_cdc_stream(spark: SparkSession, in_dir: str) -> DataFrame:
     """Streaming DataFrame of raw envelope JSON strings."""
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(in_dir)
+    return spark.readStream.format("text").load(in_dir)
 
 
 def read_cdc_batch(spark: SparkSession, in_dir: str) -> DataFrame:
     """Batch view of the same files (backfill path: the snapshot-then-
     tail pattern is ``batch backfill ∪ streaming tail`` — SURVEY §2.1 S2)."""
     return spark.read.format("text").load(in_dir)
-
-
-def default_stream_dir(base: str | None = None) -> str:
-    import tempfile
-
-    return tempfile.mkdtemp(prefix="cdc_stream_", dir=base)
-
-
-def checkpoint_dir(base: str | None = None) -> str:
-    import tempfile
-
-    return tempfile.mkdtemp(prefix="cdc_ckpt_", dir=base)
-
-
-def cleanup(*dirs: str) -> None:
-    import shutil
-
-    for d in dirs:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def ensure_empty(path: str) -> str:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
-    return path

@@ -36,6 +36,12 @@ from cdc_realtime_pipeline_spark.operators import dq as _dq_oracles
 from cdc_realtime_pipeline_spark.operators import inference as _inf_oracles
 from cdc_realtime_pipeline_spark.operators import temporal as _tmp_oracles
 from cdc_realtime_pipeline_spark.operators import timeseries as _ts_oracles
+from cdc_realtime_pipeline_spark.operators.cdc_ops import (
+    current_state,
+    roundtrip_columns,
+    update_log_events,
+    versions,
+)
 from cdc_realtime_pipeline_spark.operators.window_agg import (
     EVENTS_WINDOW_AGG_5M_SQL,
     events_as_trades,
@@ -43,7 +49,10 @@ from cdc_realtime_pipeline_spark.operators.window_agg import (
     round_trade_agg,
     trade_partials,
 )
-from cdc_realtime_pipeline_spark.sources.cdc_file_source import write_cdc_json_files
+from cdc_realtime_pipeline_spark.sources.cdc_file_source import (
+    read_cdc_stream,
+    write_cdc_json_files,
+)
 from cdc_realtime_pipeline_spark.streaming.anomaly_stateful import apply_anomaly_detector
 
 # Synthesized CDC "topic" directories, keyed by (sf_dir, variant) —
@@ -55,8 +64,6 @@ _TOPIC_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _cdc_topic(spark: SparkSession, sf_dir: str, variant: str = "plain") -> str:
-    import os
-
     key = (sf_dir, variant)
     if key not in _TOPIC_CACHE:
         events = load_table(spark, sf_dir, "events")
@@ -64,14 +71,8 @@ def _cdc_topic(spark: SparkSession, sf_dir: str, variant: str = "plain") -> str:
             # 10% replayed rows — the dedup queries' duplicate feed
             events = events.unionAll(events.filter(F.col("event_id") % 10 == 0))
         elif variant == "apply":
-            # the apply-changes change log: every 5th event replayed
-            # with a doubled price one hour later (mirrors
-            # cdc_ops.cdc_apply_changes' synthesis, shares its oracle)
-            events = events.unionAll(
-                events.filter(F.col("event_id") % 5 == 0)
-                .withColumn("value", F.col("value") * 2)
-                .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-            )
+            # the batch apply/SCD2 queries' update log, shares their oracles
+            events = update_log_events(events)
         out = os.path.join(
             scratch_dir("cdc_topics"),
             f"{variant}_{abs(hash(sf_dir)) % 10**8:08d}",
@@ -112,13 +113,9 @@ def _scaled_state_partitions(spark, src) -> int:
     stateful work than they save in instance overhead — measured), and
     capped at defaultParallelism, so at cluster scale the derivation
     saturates to the cluster's own parallelism and production behavior
-    is unchanged. Override via SPARK_GRAFT_STREAM_STATE_BYTES_PER_PART
-    (bytes per state partition)."""
-    per_part = int(
-        os.environ.get("SPARK_GRAFT_STREAM_STATE_BYTES_PER_PART", str(32 << 20))
-    )
+    is unchanged."""
     cores = spark.sparkContext.defaultParallelism
-    return min(cores, max(min(cores, 4), -(-_src_bytes(src) // per_part)))
+    return min(cores, max(min(cores, 4), -(-_src_bytes(src) // (32 << 20))))
 
 
 def _memory_sink(df: DataFrame, output_mode: str, src=None) -> DataFrame:
@@ -168,21 +165,8 @@ def stream_cdc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-gated: the streamed parse must equal the batch round-trip
     (same projection as ``cdc_roundtrip``).
     """
-    raw = spark.readStream.format("text").load(_cdc_topic(spark, sf_dir))
-    parsed = parse_cdc_events(raw)
-    res = _memory_sink(parsed, "append")
-    return res.select(
-        "trade_id",
-        "market",
-        F.round("trade_price", 4).alias("trade_price"),
-        F.round("trade_volume", 4).alias("trade_volume"),
-        F.round("trade_amount", 4).alias("trade_amount"),
-        "ask_bid",
-        "upbit_timestamp",
-        "sequential_id",
-        "op",
-        "cdc_latency_ms",
-    )
+    parsed = parse_cdc_events(read_cdc_stream(spark, _cdc_topic(spark, sf_dir)))
+    return roundtrip_columns(_memory_sink(parsed, "append"))
 
 
 def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -196,7 +180,7 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture replay has no event-time watermark column ordering
     guarantee, so the exact-state form is used here.)
     """
-    raw = spark.readStream.format("text").load(_cdc_topic(spark, sf_dir, "dupes"))
+    raw = read_cdc_stream(spark, _cdc_topic(spark, sf_dir, "dupes"))
     deduped = parse_cdc_events(raw).dropDuplicates(["sequential_id"])
     res = _memory_sink(deduped, "append", src=_cdc_topic(spark, sf_dir, "dupes"))
     return res.groupBy("op").agg(F.count("*").alias("n"))
@@ -218,7 +202,7 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     and processed deterministically, so the result equals the batch
     distinct count — the oracle (shared with the exact-state twin).
     """
-    raw = spark.readStream.format("text").load(_cdc_topic(spark, sf_dir, "dupes"))
+    raw = read_cdc_stream(spark, _cdc_topic(spark, sf_dir, "dupes"))
     parsed = parse_cdc_events(raw).withColumn(
         "event_time", F.timestamp_millis(F.col("upbit_timestamp"))
     )
@@ -266,8 +250,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch, fact side never shuffles). Oracle-gated: the static
     dim is deterministic, so the batch answer is identical.
     """
-    raw = spark.readStream.format("text").load(_cdc_topic(spark, sf_dir))
-    parsed = parse_cdc_events(raw)
+    parsed = parse_cdc_events(read_cdc_stream(spark, _cdc_topic(spark, sf_dir)))
     tiers = spark.createDataFrame(
         [(0, "hot", 400.0), (1, "warm", 300.0), (2, "cold", 200.0)],
         "tier int, tier_name string, min_price double",
@@ -644,30 +627,20 @@ def stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-computed fixtures.
     """
     if sf_dir not in _ALERTS_CACHE:
-        raw = spark.readStream.format("text").load(_cdc_topic(spark, sf_dir))
-        parsed = parse_cdc_events(raw)
+        parsed = parse_cdc_events(read_cdc_stream(spark, _cdc_topic(spark, sf_dir)))
         alerts = apply_anomaly_detector(parsed)
         _ALERTS_CACHE[sf_dir] = _memory_sink(alerts, "append", src=_cdc_topic(spark, sf_dir))
     return _ALERTS_CACHE[sf_dir]
 
 
-def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CDC apply — the reference pipeline's end state (a
-    continuously-maintained current-rows table) as a streaming job: the
-    change log streams through ``foreachBatch``, each micro-batch
-    appends its changes to the materialized store, and the read side
-    resolves the latest version per key (rank on (cdc_ts,
-    sequential_id)) and drops deleted keys — apply-at-read, exactly the
-    MERGE-INTO emulation the batch ``cdc_apply_changes`` uses, and
-    gated against that query's oracle. On Delta/Iceberg the foreachBatch
-    body becomes a real MERGE and the read side loses the window.
-    """
-    import os
-
-    raw = spark.readStream.format("text").load(_cdc_topic(spark, sf_dir, "apply"))
-    parsed = parse_cdc_events(raw)
+def _drained_update_log(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream the update-log topic through ``foreachBatch`` appends into
+    a fresh parquet store (availableNow) and return the log read back.
+    The store stays append-only; the current-state and version views
+    resolve at read time. On Delta/Iceberg the foreachBatch body would
+    be the MERGE itself."""
     store = os.path.join(
-        scratch_dir("cdc_apply_store"),
+        scratch_dir("cdc_log_store"),
         f"{abs(hash(sf_dir)) % 10**8:08d}",
         uuid.uuid4().hex[:8],  # fresh store per run: appends accumulate
     )
@@ -675,31 +648,24 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _append(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(store)
 
-    q = (
+    parsed = parse_cdc_events(read_cdc_stream(spark, _cdc_topic(spark, sf_dir, "apply")))
+    (
         parsed.writeStream.foreachBatch(_append)
         .option("checkpointLocation", store + "_ckpt")
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
-    log = spark.read.parquet(store)
-    # latest-version-per-key via map-side-reducing max_by instead of a
-    # rank window (round 13) — same winner (generator guarantees one
-    # op per key per (cdc_ts, seq) position), mirrors the batch
-    # cdc_apply_changes plan it is oracle-gated against
-    latest = log.groupBy("trade_id").agg(
-        F.max_by(
-            F.struct("op", "market", "trade_price", "ask_bid", "upbit_timestamp"),
-            F.struct("cdc_ts", "sequential_id"),
-        ).alias("w")
-    )
-    return latest.filter(F.col("w.op") != "d").select(
-        "trade_id",
-        F.col("w.market").alias("market"),
-        F.round("w.trade_price", 4).alias("trade_price"),
-        F.col("w.ask_bid").alias("ask_bid"),
-        F.col("w.upbit_timestamp").alias("upbit_timestamp"),
-    )
+    return spark.read.parquet(store)
+
+
+def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming CDC apply — the reference pipeline's end state (a
+    continuously-maintained current-rows table) as a streaming job: the
+    update log streams into the append-only store and the read side
+    resolves ``current_state``, the MERGE-INTO emulation the batch
+    ``cdc_apply_changes`` uses; gated against that query's oracle."""
+    return current_state(_drained_update_log(spark, sf_dir))
 
 
 def stream_docs_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1258,13 +1224,10 @@ FROM events GROUP BY 1 ORDER BY 1
 
 def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SCD2 maintenance — the dimension-HISTORY twin of
-    `stream_cdc_apply`: the same change log streams through
-    ``foreachBatch`` appends into the version store, and the read side
-    closes validity intervals with a lead window per key — every
-    non-delete change is a version row (valid_from/valid_to/
-    is_current), a trailing delete closes the key's last interval.
-    Gated against the batch `cdc_scd2_history` oracle (identical log
-    synthesis: base ∪ every-5th replayed at +1 h with doubled price).
+    `stream_cdc_apply`: the same update log streams into the
+    append-only store, and the read side closes validity intervals
+    with ``versions``. Gated against the batch `cdc_scd2_history`
+    oracle.
 
     On Delta/Iceberg the foreachBatch body becomes the classic SCD2
     MERGE (match on key + is_current → expire, insert new version);
@@ -1273,39 +1236,7 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over versions-per-key (small), while closing them at write
     rewrites files on every batch.
     """
-    import os
-
-    from pyspark.sql.window import Window
-
-    raw = spark.readStream.format("text").load(_cdc_topic(spark, sf_dir, "apply"))
-    parsed = parse_cdc_events(raw)
-    store = os.path.join(
-        scratch_dir("cdc_scd2_store"),
-        f"{abs(hash(sf_dir)) % 10**8:08d}",
-        uuid.uuid4().hex[:8],
-    )
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(store)
-
-    q = (
-        parsed.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", store + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    log = spark.read.parquet(store)
-    w = Window.partitionBy("trade_id").orderBy("cdc_ts", "sequential_id")
-    versions = log.withColumn("valid_to_ms", F.lead("cdc_ts").over(w))
-    return versions.filter(F.col("op") != "d").select(
-        "trade_id",
-        "market",
-        F.round("trade_price", 4).alias("trade_price"),
-        F.col("cdc_ts").alias("valid_from_ms"),
-        "valid_to_ms",
-        F.col("valid_to_ms").isNull().alias("is_current"),
-    )
+    return versions(_drained_update_log(spark, sf_dir))
 
 
 def cdc_python_datasource_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1328,19 +1259,7 @@ def cdc_python_datasource_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
         .option("path", _cdc_topic(spark, sf_dir, "plain"))
         .load()
     )
-    parsed = parse_cdc_events(raw.select("value"))
-    return parsed.select(
-        "trade_id",
-        "market",
-        F.round("trade_price", 4).alias("trade_price"),
-        F.round("trade_volume", 4).alias("trade_volume"),
-        F.round("trade_amount", 4).alias("trade_amount"),
-        "ask_bid",
-        "upbit_timestamp",
-        "sequential_id",
-        "op",
-        "cdc_latency_ms",
-    )
+    return roundtrip_columns(parse_cdc_events(raw.select("value")))
 
 
 def stream_cdc_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1366,26 +1285,11 @@ def stream_cdc_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (its API contract — the documented structural exception), which
     # leaves the downstream from_json parse on ONE partition. Spread
     # the parse before paying it (round 13, guide §2): partition count
-    # derived from source bytes exactly like _scaled_state_partitions,
-    # so production behavior saturates to the cluster's parallelism.
-    par = min(
-        spark.sparkContext.defaultParallelism,
-        max(4, -(-_src_bytes(topic) // (32 << 20))),
-    )
+    # derived from source bytes by _scaled_state_partitions, so
+    # production behavior saturates to the cluster's parallelism.
+    par = _scaled_state_partitions(spark, topic)
     parsed = parse_cdc_events(raw.select("value").repartition(par))
-    res = _memory_sink(parsed, "append", src=topic)
-    return res.select(
-        "trade_id",
-        "market",
-        F.round("trade_price", 4).alias("trade_price"),
-        F.round("trade_volume", 4).alias("trade_volume"),
-        F.round("trade_amount", 4).alias("trade_amount"),
-        "ask_bid",
-        "upbit_timestamp",
-        "sequential_id",
-        "op",
-        "cdc_latency_ms",
-    )
+    return roundtrip_columns(_memory_sink(parsed, "append", src=topic))
 
 
 def cdc_python_datasource_write_roundtrip(
@@ -1422,19 +1326,7 @@ def cdc_python_datasource_write_roundtrip(
         "overwrite"
     ).option("path", out).save()
     raw = spark.read.format("cdc_envelope").option("path", out).load()
-    parsed = parse_cdc_events(raw.select("value"))
-    return parsed.select(
-        "trade_id",
-        "market",
-        F.round("trade_price", 4).alias("trade_price"),
-        F.round("trade_volume", 4).alias("trade_volume"),
-        F.round("trade_amount", 4).alias("trade_amount"),
-        "ask_bid",
-        "upbit_timestamp",
-        "sequential_id",
-        "op",
-        "cdc_latency_ms",
-    )
+    return roundtrip_columns(parse_cdc_events(raw.select("value")))
 
 
 def cep_triples_of_key(pdf, st: dict):

@@ -365,8 +365,8 @@ def test_repo_wide_no_cartesian_no_rowwise_python(spark):
     # JVM-side and py4j releases the GIL on socket reads, so 8 driver
     # threads overlap the ~350 per-query analysis passes (guide §2.6 —
     # the sweep must fit the driver's pytest window). Builds are
-    # independent: per-query temp-view names are disjoint, memo races
-    # are benign last-write-wins on identical results.
+    # independent: per-query temp-view names are disjoint, and
+    # memo_persist builds a cold slot once under its lock.
     def check(item):
         name, fn = item
         out = []
@@ -427,3 +427,46 @@ def test_prewarm_covers_every_memo_slot():
             declared.add(m.group(1))
     missing = declared - known_slots()
     assert not missing, f"memo slots absent from prewarm table: {missing}"
+
+
+def test_memo_persist_builds_a_cold_slot_once_under_concurrency():
+    """Threads racing on one cold ``memo_persist`` slot (the
+    thread-parallel plan sweep above) must build and persist it once
+    and share the result — a losing thread's persisted copy would
+    never be unpersisted."""
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from cdc_realtime_pipeline_spark import session
+
+    class _Frame:
+        def __init__(self):
+            self.persisted = 0
+
+        def persist(self):
+            self.persisted += 1
+
+        def unpersist(self):
+            self.persisted -= 1
+
+    builds = []
+    start = threading.Barrier(8)
+
+    def build():
+        time.sleep(0.05)  # widen the check-then-store window
+        builds.append(_Frame())
+        return builds[-1]
+
+    def call(_):
+        start.wait()
+        return session.memo_persist("_concurrency_probe", object, "sf", build)
+
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            got = list(pool.map(call, range(8)))
+    finally:
+        session._MEMOIZED.pop("_concurrency_probe", None)
+    assert len(builds) == 1
+    assert all(g is builds[0] for g in got)
+    assert builds[0].persisted == 1

@@ -1,10 +1,14 @@
-"""Every form of the 5-minute trade aggregate against its DuckDB oracle.
+"""Every form of the 5-minute trade aggregate and of the CDC change log
+against its DuckDB oracle.
 
 The batch, salted, hourly-rollup, streaming and fan-out forms of the
 trade window aggregate share one partial/merge/finalize definition
-(operators/window_agg.py); each registered query must still match its
-registry oracle by row count and order-insensitive value hash — the
-same comparison ``tools/check_correctness.py`` makes.
+(operators/window_agg.py); the batch, streaming and Python-DataSource
+round-trips, current-state and version views of the CDC change log
+share one definition (operators/cdc_ops.py). Each registered query
+must still match its registry oracle by row count and
+order-insensitive value hash — the same comparison
+``tools/check_correctness.py`` makes.
 """
 
 from __future__ import annotations
@@ -33,6 +37,19 @@ TRADE_AGG_QUERIES = [
     "stream_merged_trade_agg",
 ]
 
+CDC_LOG_QUERIES = [
+    "cdc_roundtrip",
+    "cdc_apply_changes",
+    "cdc_scd2_history",
+    "pit_join_versions",
+    "stream_cdc_parse",
+    "stream_cdc_apply",
+    "stream_cdc_scd2",
+    "cdc_python_datasource_roundtrip",
+    "stream_cdc_python_datasource",
+    "cdc_python_datasource_write_roundtrip",
+]
+
 
 @pytest.fixture(scope="module")
 def duck(sf_dir):
@@ -45,7 +62,7 @@ def duck(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", TRADE_AGG_QUERIES)
+@pytest.mark.parametrize("name", TRADE_AGG_QUERIES + CDC_LOG_QUERIES)
 def test_trade_agg_matches_oracle(spark, sf_dir, duck, name):
     sdf = all_queries()[name](spark, sf_dir)
     srows = [r[:] for r in sdf.collect()]
