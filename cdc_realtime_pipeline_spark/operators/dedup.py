@@ -188,16 +188,6 @@ def dedup_docs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At scale: one shuffle on the 128-bit content hash — the standard
     first pass of any training-data dedup pipeline.
-
-    Perf adjudication (VERDICT r3 #4 — BENCH_r03 recorded 3.20 s vs
-    r2's 2.06 s on unchanged code): 3× back-to-back sf0.1 reruns on
-    2026-08-13 measured 1.18–1.62 s warm — the 3.20 s reading was a
-    cold-start outlier, not a plan change. (Root cause refined in r4:
-    the old bench's calib_start ≈ 0.67 s vs calib_end ≈ 0.29 s in
-    EVERY round was a systematic first-scan bias — lineitem page
-    cache + scan JIT the warmup never touched — now fixed in bench.py
-    with an untimed throwaway probe; cross-round normalization should
-    use the steady-state calib pair.)
     """
     docs = docs_with_dupes(spark, sf_dir).withColumn(
         "content_hash", F.md5(normalize_text(F.col("text")))
@@ -935,11 +925,7 @@ FROM agg ORDER BY source_a, source_b
 
 # The containment decision, named once: pairs must share at least
 # CONTAINMENT_MIN_INTER shingles (noise floor for tiny docs) and have
-# C = |A∩B| / min(|A|,|B|) ≥ CONTAINMENT_TAU. tools/fs_lever_probe.py
-# scores the candidate generator against exactly this predicate via
-# ``containment_filter`` — one definition, so the probe can never
-# silently measure a different pair family than the shipped operator
-# (round-13 review).
+# C = |A∩B| / min(|A|,|B|) ≥ CONTAINMENT_TAU.
 CONTAINMENT_TAU = 0.9
 CONTAINMENT_MIN_INTER = 5
 
@@ -1717,8 +1703,8 @@ def linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     join pair-sized relations on doc_id; parameter estimation is one
     1-row aggregate broadcast back. Banding is a bounded aggregate.
 
-    100 TB lever — MEASURED in round 12 (VERDICT r11 #2;
-    tools/fs_lever_probe.py, table in SCALING.md §Round-12): every
+    100 TB lever — MEASURED in round 12 (VERDICT r11 #2; table in
+    SCALING.md §Round-12): every
     stage here is Θ(candidate-pair mass) and ``MAX_SHINGLE_DF`` does
     control that mass (16 → 8 cuts verified candidates 16× with
     recall 1.0 at J ≥ 0.6 — the band backstop holds exactly as its

@@ -1844,8 +1844,7 @@ def _basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session memo: per-order DISTINCT parts — the basket relation
     both market-basket consumers (`copurchase_pairs_topk`,
     `market_basket_rules`) key every stage on (round 13, guide §5:
-    the `neardup_candidates` discipline applied to baskets). Prewarmed
-    untimed by bench.py like every memo slot."""
+    the `neardup_candidates` discipline applied to baskets)."""
     from cdc_realtime_pipeline_spark.session import memo_persist
 
     return memo_persist(

@@ -3,8 +3,7 @@
 The reference itself needs no joins (SURVEY.md §2.5 — its only
 "join-like" behavior is Grafana correlating panels visually), but a
 complete engine must provide them; these queries exercise the join /
-window-function / top-K surface over the driver's TPC-H-ish fixtures
-and double as the scale benchmark workload (bench.py).
+window-function / top-K surface over the driver's TPC-H-ish fixtures.
 
 Scale posture baked into each plan:
 * dimension tables are ``F.broadcast``-hinted — no shuffle of the fact

@@ -489,15 +489,6 @@ def _corpus_count(spark: SparkSession, sf_dir: str) -> int:
     return n
 
 
-def _corpus_count_prewarm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prewarm shim (plans/prewarm.py slot ``emb_count``): pay the
-    geometry-derivation count() job untimed with the other
-    once-per-corpus builds so `dedup_embeddings_cosine`'s timed bench
-    row stays comparable to pre-parameterization rounds."""
-    _corpus_count(spark, sf_dir)
-    return load_table(spark, sf_dir, "embeddings").select("vec_id").limit(1)
-
-
 def lsh_band_geometry(
     n_vectors: int,
     tau: float = 0.95,
@@ -593,11 +584,10 @@ def dedup_embeddings_cosine(
 
     NOTE (round-12 review): deriving the default geometry runs ONE
     parquet-metadata count() job at plan-BUILD time (first call per
-    fixture per session; cached thereafter, prewarmed untimed by the
-    ``emb_count`` slot). Explain-only consumers pay that one job; any
-    explicit ``bits`` (bands may stay derived) keeps plan
-    construction fully lazy — the count is skipped whenever bits is
-    pinned (ADVICE r12).
+    fixture per session; cached thereafter). Explain-only consumers
+    pay that one job; any explicit ``bits`` (bands may stay derived)
+    keeps plan construction fully lazy — the count is skipped whenever
+    bits is pinned (ADVICE r12).
     """
     tau = 0.95
     base = load_table(spark, sf_dir, "embeddings").select(
@@ -2238,9 +2228,8 @@ def embeddings_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             # §3.3 "materialise to truncate the plan"): w is consumed
             # by norm AND v AND the next iteration, and the lazy unroll
             # re-expanded the whole corpus-sized subtree at every
-            # reference — the 3-step plan carried ~146 Exchange nodes
-            # (plans/r13/embeddings_pca_power_before.txt). Each
-            # iteration now runs its two aggregates exactly once.
+            # reference — the 3-step plan carried ~146 Exchange nodes.
+            # Each iteration now runs its two aggregates exactly once.
             .localCheckpoint()
         )
         norm = w.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("l"))
@@ -4063,7 +4052,7 @@ def embeddings_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-vector ln terms are rounded 8dp before the sum; the output is
     one bounded row.
     """
-    g = _knn_graph_memo(spark, sf_dir).filter(F.col("rank") <= 2)
+    g = embeddings_knn_graph(spark, sf_dir).filter(F.col("rank") <= 2)
     per = g.groupBy("vec_id").agg(
         F.max(F.when(F.col("rank") == 1, 1.0 - F.col("cos"))).alias("d1"),
         F.max(F.when(F.col("rank") == 2, 1.0 - F.col("cos"))).alias("d2"),
@@ -4128,7 +4117,7 @@ def embeddings_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # the graph is session-memoized (round 13) — do NOT tracked_persist
     # it here, or release_caches() would evict the shared memo
-    g = _knn_graph_memo(spark, sf_dir)
+    g = embeddings_knn_graph(spark, sf_dir)
     nodes = g.select("vec_id").distinct()
     occ = g.groupBy(F.col("nbr_id").alias("vec_id")).agg(
         F.count("*").alias("o")
@@ -4629,23 +4618,10 @@ def embeddings_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     one). Recall floor vs exact is pinned in tests, not the oracle
     (approximation is the contract; determinism is what's gated).
 
-    Memo pricing (round 14, VERDICT r13 #1): the PUBLIC query builds
-    the graph fresh on every invocation, so its own timed bench row
-    prices the full build — round 13 had made this entry a
-    ``memo_persist`` read, which let the row price a cache hit of
-    work done in the untimed prewarm. The session memo (`knn_graph`
-    slot) remains for the two downstream consumers
-    (`embeddings_intrinsic_dim`, `embeddings_hubness_audit`) via
-    ``_knn_graph_memo`` — the work-dedup across consumers is real;
-    only the builder row's attribution changed.
+    The graph is session-memoized (``knn_graph`` slot) and shared by
+    its two downstream consumers (`embeddings_intrinsic_dim`,
+    `embeddings_hubness_audit`), so a sweep builds it once.
     """
-    return _knn_graph_build(spark, sf_dir)
-
-
-def _knn_graph_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized graph for downstream consumers (the
-    `neardup_candidates` discipline); the public query deliberately
-    does NOT read this — see embeddings_knn_graph's pricing note."""
     return memo_persist(
         "knn_graph", spark, sf_dir, lambda: _knn_graph_build(spark, sf_dir)
     )

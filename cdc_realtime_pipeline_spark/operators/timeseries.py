@@ -304,7 +304,7 @@ def resample_locf(
     # so ReuseExchange cannot dedup them). The relation is |keys ×
     # buckets| rows, orders of magnitude under the tick count. The
     # join side broadcasts and the LOCF window reuses the grid's
-    # key partitioning, both as before (plan pinned in plans/r13).
+    # key partitioning, both as before.
     # Round 14: VOLUME-GATED (the hampel #19 discipline) — at fixture
     # scale the two scans previously ran stage-parallel on idle cores,
     # so the persist's materialization barrier LOST ~0.7 s at sf0.1

@@ -4,41 +4,11 @@ Aggregates every operator module's ``QUERIES`` (name → callable taking
 ``(spark, sf_dir)`` and returning a DataFrame) and ``ORACLES`` (name →
 equivalent DuckDB SQL). ``__spark_entry__.py`` re-exports these; the
 driver runs both sides at sf0.01 and compares row count + schema +
-order-insensitive value hash (CORRECTNESS_r{N}.json).
+order-insensitive value hash; ``tools/check_correctness.py`` runs the
+same comparison locally.
 
-Ordering contract: the driver evaluates at most the FIRST 50 entries in
-dict insertion order (observed round 1), so ``_PRIORITY`` pins exactly
-50 names covering every operator family — CDC, dedup, similarity, text,
-training-data, multimodal, temporal, streaming, plus the reference's
-core window/anomaly/dashboard queries — into that window. Remaining
-queries (mostly relational/extended variants that earned green driver
-rows in round 1) follow in module order; the local harness
-(tools/check_correctness.py) still verifies all of them every round,
-at sf0.01 AND (per-round ritual) sf0.1 + sf0.001.
-
-Round-14 window composition (VERDICT r13 #8 — drain the recorded
-rotation queue): oldest driver evidence first. Slots 1-23 are the
-round-13-recorded queue — the 23 r6-evidence names that did not fit
-the r13 window, in CORRECTNESS_r06.json order
-(`corpus_vocab_coverage_curve` … `dash_avg_latency_last_day`).
-Slots 24-50 are the first 27 of the r7-evidence pool — every
-oracle-gated name whose latest full (hash-match) driver row is
-CORRECTNESS_r07.json, in r7 order, recomputed against every
-CORRECTNESS_r*.json before rotation (`lang_source_chisq` lands in
-the pool tail and queues for r15). No round-13/14 change touches a
-windowed name's values — round 14 is an optimization round
-(plan/pricing changes only), and the local 3-SF full-registry
-oracle gate re-proves every name before the round closes.
-
-Round-15 rotation queue — the 21 remaining r7-evidence names in r7
-order (listed at _PRIORITY below), then the r8 pool, oldest
-evidence first per CORRECTNESS_r0*.json — plus any query whose
-values change in round 14 and any round-14 additions. Rows-only
-names (`value_quantiles_approx` r3, `dedup_candidates_audit` r4,
-`stream_anomaly_alerts` r2, …) are not queued: the driver records
-only a weaker rows-only check for them, their oracle-gated twins
-rotate instead, and the local harness re-verifies their self-checks
-at 3 SFs every round.
+Order: ``all_queries()`` is the merge of every module's ``QUERIES``
+in ``_MODULES`` order, so two calls list the names the same way.
 
 Names present in QUERIES but not ORACLES are intentionally weaker
 rows-only checks (approximate or dialect-pathological operators —
@@ -95,110 +65,14 @@ _MODULES = [
     stream_queries,
 ]
 
-# The 50 names the driver is guaranteed to check, in order. See the
-# module docstring for this round's composition rationale.
-#
-# Round-14 window (VERDICT r13 #8 — drain the rotation queue as
-# planned): oldest driver evidence first. Slots 1-23 are the r14
-# queue recorded in round 13 — the 23 r6-evidence names that did not
-# fit the r13 window, in CORRECTNESS_r06.json order
-# (`corpus_vocab_coverage_curve` … `dash_avg_latency_last_day`).
-# Slots 24-50 are the first 27 of the r7-evidence pool — every
-# oracle-gated name whose LATEST full (hash-match) driver row is
-# CORRECTNESS_r07.json, in r7 order, none superseded by r8-r13
-# evidence (recomputed against all CORRECTNESS_r*.json before
-# rotation). No round-13/14 change touches any windowed name's
-# values (round 14 is plan/pricing-only; the full local 3-SF oracle
-# gate re-proves the registry before the round closes).
-#
-# Round-15 rotation queue: the 21 remaining r7-evidence names in r7
-# order — `dash_bid_ask_ranking`, `region_revenue`,
-# `revenue_top_orders`, `tpch_q6`, `alerts_large_trade`,
-# `alerts_rapid_trades`, `tpch_q1`, `tpch_q12_like`, `tpch_q14_like`,
-# `sessionize`, `window_rank_functions`, `value_quantiles`,
-# `sessionize_native`, `window_agg_5m_salted`, `dash_recent_alerts`,
-# `dash_live_trades`, `dash_pipeline_liveness`,
-# `similarity_pq_adc_topk`, `events_stl_decompose`,
-# `hourly_value_fdr_bh`, `lang_source_chisq` — then the r8 pool,
-# oldest evidence first. Rows dropped this round hold r13 green
-# evidence on unchanged code and stay under the local 3-SF harness.
-_PRIORITY = [
-    # r6-evidence queue (recorded round 13)
-    "corpus_vocab_coverage_curve",
-    "orders_cohort_ltv_curve",
-    "dup_graph_common_neighbors",
-    "text_rake_keywords",
-    "embeddings_pq_assign",
-    "value_mannwhitney_grid",
-    "value_spearman_banded",
-    "events_bootstrap_ci",
-    "events_countmin_audit",
-    "events_periodogram",
-    "value_hampel_filter",
-    "bucketed_join_colocated",
-    "events_holt_linear",
-    "dup_graph_kcore",
-    "events_anova_oneway",
-    "dynamic_partition_pruning_join",
-    "text_bigram_kneser_ney",
-    "orders_survival_km",
-    "customer_value_gini",
-    "label_knn_loo_eval",
-    "dash_total_trades",
-    "dash_volume_last_day",
-    "dash_avg_latency_last_day",
-    # r7-evidence pool head (CORRECTNESS_r07.json order)
-    "events_markov_stationary",
-    "value_hill_tail_index",
-    "stream_countmin_sketch",
-    "source_stylometry_delta",
-    "label_silhouette_centroid",
-    "parts_abc_classification",
-    "dup_graph_assortativity",
-    "lineitem_weighted_median",
-    "events_two_proportion_ztest",
-    "user_poisson_regression",
-    "user_logistic_regression",
-    "value_conformal_interval",
-    "text_pmi_collocations",
-    "user_overdispersion_check",
-    "customer_tercile_migration",
-    "lang_id_cohens_kappa",
-    "kmeans_label_ari",
-    "text_readability_flesch",
-    "events_dau_wau_stickiness",
-    "customer_lorenz_curve",
-    "embeddings_anisotropy_audit",
-    "text_mtld_diversity",
-    "dash_distinct_users",
-    "dash_latency_per_minute",
-    "date_functions",
-    "top_parts_per_supplier",
-    "ema_per_key",
-]
 
-
-def _merged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for m in _MODULES:
         overlap = out.keys() & m.QUERIES.keys()
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         out.update(m.QUERIES)
-    return out
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    merged = _merged_queries()
-    missing = [n for n in _PRIORITY if n not in merged]
-    if missing:
-        raise ValueError(f"_PRIORITY names not registered: {missing}")
-    if len(_PRIORITY) != len(set(_PRIORITY)):
-        raise ValueError("_PRIORITY contains duplicates")
-    if len(_PRIORITY) != 50:
-        raise ValueError(f"_PRIORITY must pin exactly 50 names, got {len(_PRIORITY)}")
-    out = {n: merged[n] for n in _PRIORITY}
-    out.update({n: f for n, f in merged.items() if n not in out})
     return out
 
 

@@ -59,7 +59,7 @@ def test_modularity_contributions_bounded(spark, sf_dir):
 def test_roc_auc_matches_pure_python(spark, sf_dir):
     """The rank-statistic AUC agrees with a from-scratch pairwise
     computation over the same (score, label) relation, and the
-    headline metrics sit in their ranges."""
+    summary metrics sit in their ranges."""
     from cdc_realtime_pipeline_spark.operators.inference import (
         _logistic_fit,
         user_logistic_roc_auc,

@@ -135,22 +135,6 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    # Untimed memo prewarm on full sweeps (VERDICT r10 #2 — the bench
-    # discipline, bench.py:283-291): without it every sweep session
-    # re-pays each session-memo build inside whichever consumer runs
-    # first (`similarity_recall_report_full` read 50.3 s cold, 6.9 s
-    # warm). Cost is printed separately so the per-query lines below
-    # measure steady-state consumption. Filtered runs skip it — a
-    # single-query debug loop should pay only its own builds.
-    if not name_filter:
-        from cdc_realtime_pipeline_spark.plans.prewarm import prewarm_memos
-
-        t0 = time.time()
-        per_slot = prewarm_memos(spark, sf_dir)
-        print(
-            f"# memo_prewarm_sec total={time.time() - t0:.1f} "
-            + " ".join(f"{k}={v:.1f}" for k, v in per_slot.items())
-        )
     n_pass = n_fail = n_rows_only = 0
     for name, fn in qs.items():
         if name_filter and not any(f in name for f in name_filter.split(",")):
@@ -170,7 +154,7 @@ def main() -> int:
         # The driver canonicalizes via pandas sort_values, which throws
         # "unhashable type" on array/map/struct-typed columns — even for
         # rows-only checks. Flag those here so they can't pass locally
-        # and crash at the driver (CORRECTNESS_r01: array_functions,
+        # and crash at the driver (round 1: array_functions,
         # value_quantiles_approx).
         bad_cols = [
             c for c, t in sdtypes.items()

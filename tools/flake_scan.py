@@ -14,9 +14,9 @@ Two-pass structure (round-11 review finding): session memos survive
 executions from the same persisted memo relations and be blind to
 nondeterminism inside the memo builds themselves (shingles, CC
 labels, TF-IDF norms, MinHash sigs, PQ/OPQ tables). Instead: pass 1
-hashes every query against one fully-built memo generation, then
-``release_memos()`` + re-prewarm REBUILDS every memo from scratch,
-and pass 2 re-hashes against the second generation — a flaky memo
+hashes every query, building each memo on its first use, then
+``release_memos()`` drops them all so pass 2 rebuilds every memo from
+scratch and re-hashes against that second generation — a flaky memo
 build surfaces as a hash mismatch in every consumer.
 
     python tools/flake_scan.py [sf_dir]
@@ -39,7 +39,6 @@ def main() -> int:
     from check_correctness import value_hash
 
     from cdc_realtime_pipeline_spark.plans import registry
-    from cdc_realtime_pipeline_spark.plans.prewarm import prewarm_memos
     from cdc_realtime_pipeline_spark.session import (
         get_spark,
         release_caches,
@@ -52,7 +51,6 @@ def main() -> int:
     t0 = time.time()
 
     def one_pass(tag: str) -> dict[str, str | None]:
-        prewarm_memos(spark, sf)
         hashes: dict[str, str | None] = {}
         for name, fn in qs.items():
             try:

@@ -6,11 +6,7 @@ drifted in two consecutive rounds. This tool rewrites it from
 generated value. Run it (and commit the result) whenever the
 registry changes:
 
-    python tools/update_coverage_header.py [round_number]
-
-The round number stamped into the header defaults to the highest
-``BENCH_r{NN}.json`` present plus one (the in-progress round), so the
-tool never re-stamps a stale hard-coded round (ADVICE r7).
+    python tools/update_coverage_header.py
 """
 
 from __future__ import annotations
@@ -25,34 +21,14 @@ from cdc_realtime_pipeline_spark.plans.registry import all_oracles, all_queries
 
 COVERAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "COVERAGE.md")
 
-_HEADER_RE = re.compile(r"with \d+ queries / \d+ oracles \(end of\nround \d+\)")
-
-
-def _current_round() -> int:
-    """Highest BENCH_r{NN}.json = the round most recently ENDED.
-
-    The header reads "(end of round N)", so the default must be the
-    last completed round, not the one in progress (ADVICE r8 — the
-    old +1 default stamped "end of round 9" before round 9 ended).
-    Pass the round explicitly as argv[1] to override.
-    """
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [
-        int(m.group(1))
-        for f in os.listdir(repo)
-        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
-    ]
-    return max(rounds) if rounds else 1
+_HEADER_RE = re.compile(r"with \d+ queries / \d+ oracles")
 
 
 def main() -> int:
-    rnd = int(sys.argv[1]) if len(sys.argv) > 1 else _current_round()
     nq, no = len(all_queries()), len(all_oracles())
     with open(COVERAGE) as f:
         text = f.read()
-    new = _HEADER_RE.sub(
-        f"with {nq} queries / {no} oracles (end of\nround {rnd})", text, count=1
-    )
+    new = _HEADER_RE.sub(f"with {nq} queries / {no} oracles", text, count=1)
     if new == text and f"with {nq} queries" not in text:
         print("ERROR: header pattern not found — COVERAGE.md format changed", file=sys.stderr)
         return 1
