@@ -54,67 +54,68 @@ def retention_horizon(months: list[str], keep_last: int) -> list[str]:
     return sorted(months)[-keep_last:]
 
 
-def compact_partition(spark: SparkSession, table_dir: str, month: str, target_files: int = 1) -> int:
-    """Rewrite one month partition into ``target_files`` files.
+def swap_in(staged: str, live: str) -> None:
+    """Replace directory ``live`` with the fully written ``staged`` one
+    — the staged swap compaction, backfill, write-audit-publish and
+    the latency-MV compaction share. The live directory is renamed
+    aside, the staged one renamed into place, and the old copy deleted
+    last; if the swap-in rename fails the old directory is renamed
+    back, so the live path keeps its old contents. ``live`` may not
+    exist yet (a first publish).
 
-    Staged rewrite + rename-aside swap: readers see complete-old,
-    complete-new, or a retryable path-not-found during the brief
-    between-renames window — never a PARTIAL partition (caveats on the
-    swap below). Returns the number of files before compaction.
+    Readers see complete-old, complete-new, or a retryable
+    path-not-found during the brief window between the two renames —
+    never a PARTIAL directory. A crash inside that window leaves the
+    old data intact at ``<live>__swap_old`` rather than stranded.
+    Directory rename is only atomic within one POSIX filesystem; on an
+    object store use a manifest/symlink swap or a table format's
+    metadata commit (Delta/Iceberg) instead.
+    """
+    old = live + "__swap_old"
+    shutil.rmtree(old, ignore_errors=True)  # left by an interrupted swap
+    if not os.path.exists(live):
+        os.rename(staged, live)
+        return
+    os.rename(live, old)
+    try:
+        os.rename(staged, live)
+    except BaseException:
+        os.rename(old, live)
+        raise
+    shutil.rmtree(old)
+
+
+def compact_partition(spark: SparkSession, table_dir: str, month: str, target_files: int = 1) -> int:
+    """Rewrite one month partition into ``target_files`` files, written
+    aside and published with ``swap_in``. Returns the number of files
+    before compaction.
     """
     part_dir = os.path.join(table_dir, f"month={month}")
     n_before = sum(1 for f in os.listdir(part_dir) if f.endswith(".parquet"))
-    df = spark.read.parquet(part_dir)
     tmp = part_dir + "__compact_tmp"
-    old = part_dir + "__compact_old"
-    df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    # Swap via rename-aside: crash-recoverable (a failure between the
-    # renames leaves the data intact at ``__compact_old`` rather than
-    # stranded in a tmp dir), at the cost of a BRIEF read-unavailability
-    # window — between the two renames the live path does not exist, so
-    # a reader racing the swap can fail with path-not-found and must
-    # retry. Directory rename is also only atomic within one POSIX
-    # filesystem; on an object store use a manifest/symlink swap or a
-    # table format's metadata commit (Delta/Iceberg) instead.
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(part_dir, old)
-    os.rename(tmp, part_dir)
-    shutil.rmtree(old)
+    spark.read.parquet(part_dir).coalesce(target_files).write.mode("overwrite").parquet(tmp)
+    swap_in(tmp, part_dir)
     return n_before
 
 
 def backfill_partition(spark: SparkSession, table_dir: str, month: str, df) -> int:
     """Idempotent single-partition backfill — the reprocessing job that
-    recomputes ONE month and swaps it in without touching neighbors
-    (the lake analog of `INSERT OVERWRITE ... PARTITION (month=m)`;
-    on Spark-managed tables the same contract is
-    ``spark.sql.sources.partitionOverwriteMode=dynamic``).
-
-    Uses the identical staged-rename protocol as ``compact_partition``:
-    crash-recoverable (never a PARTIAL partition on the live path —
-    a reader sees complete-old, complete-new, or a retryable
-    path-not-found during the brief between-renames window; see the
-    atomicity caveats noted there). Returns the row count written.
+    recomputes ONE month and swaps it in (``swap_in``) without touching
+    neighbors (the lake analog of `INSERT OVERWRITE ... PARTITION
+    (month=m)`; on Spark-managed tables the same contract is
+    ``spark.sql.sources.partitionOverwriteMode=dynamic``). Returns the
+    row count written.
 
     ``df`` must contain exactly the recomputed rows for ``month`` —
     the caller filters; keeping the horizon outside makes the job
     re-runnable (same input → same bytes, safe under scheduler
     retries).
     """
-    import shutil
-
     part_dir = os.path.join(table_dir, f"month={month}")
     tmp = part_dir + "__backfill_tmp"
-    old = part_dir + "__backfill_old"
     n = df.count()
     df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(part_dir):
-        os.rename(part_dir, old)
-    os.rename(tmp, part_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_in(tmp, part_dir)
     return n
 
 
@@ -140,10 +141,8 @@ def write_audit_publish(spark: SparkSession, df, table_dir: str, audits) -> int:
     """Write-Audit-Publish — the staged-promotion protocol (Netflix's
     WAP / Iceberg branch-commit pattern): materialize the new table
     version to a staging path, run every audit callable against the
-    STAGED data, and only then promote it over the live path (same
-    rename-aside protocol as compaction/backfill — crash-recoverable
-    with a brief read-unavailability window between the renames; see
-    ``compact_partition`` for the POSIX/object-store caveats). A
+    STAGED data, and only then promote it over the live path with
+    ``swap_in`` (the staged swap compaction and backfill use). A
     failing audit raises :class:`AuditFailure` and leaves the live
     table byte-identical — bad data is never readable, which is the
     entire point versus validate-after-write.
@@ -153,10 +152,7 @@ def write_audit_publish(spark: SparkSession, df, table_dir: str, audits) -> int:
     the staging write is the same cost as the direct write — WAP buys
     the gate for free modulo one rename.
     """
-    import shutil
-
     tmp = table_dir + "__wap_stage"
-    old = table_dir + "__wap_old"
     df.write.mode("overwrite").parquet(tmp)
     staged = spark.read.parquet(tmp)
     for audit in audits:
@@ -164,10 +160,5 @@ def write_audit_publish(spark: SparkSession, df, table_dir: str, audits) -> int:
             shutil.rmtree(tmp, ignore_errors=True)
             raise AuditFailure(f"audit {getattr(audit, '__name__', audit)!r} rejected staged data")
     n = staged.count()
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(table_dir):
-        os.rename(table_dir, old)
-    os.rename(tmp, table_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_in(tmp, table_dir)
     return n

@@ -26,6 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from cdc_realtime_pipeline_spark.cdc.envelope import parse_cdc_events
 from cdc_realtime_pipeline_spark.operators.window_agg import (
@@ -35,6 +36,26 @@ from cdc_realtime_pipeline_spark.operators.window_agg import (
 )
 from cdc_realtime_pipeline_spark.sources.cdc_file_source import read_cdc_stream
 from cdc_realtime_pipeline_spark.streaming.anomaly_stateful import apply_anomaly_detector
+
+
+def start_query(
+    writer: DataStreamWriter, synchronous: bool = True, **trigger
+) -> StreamingQuery:
+    """Start a streaming query — the one launch policy every streaming
+    entry point shares. ``synchronous=True`` drains the input available
+    now (``availableNow``) and returns the finished query: the mode
+    of the tests, the benchmark drains and the registry queries.
+    Otherwise the query keeps running on ``trigger``
+    (``DataStreamWriter.trigger`` keywords; none = Spark's default
+    micro-batch trigger) and is returned live."""
+    if synchronous:
+        writer = writer.trigger(availableNow=True)
+    elif trigger:
+        writer = writer.trigger(**trigger)
+    q = writer.start()
+    if synchronous:
+        q.awaitTermination()
+    return q
 
 
 def _with_event_time(parsed: DataFrame, time_mode: str = "event") -> DataFrame:
@@ -107,14 +128,7 @@ def run_cdc_fanout(
     writer = parsed.writeStream.foreachBatch(fanout).option(
         "checkpointLocation", os.path.join(checkpoint_base, "fanout")
     )
-    if synchronous:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    q = writer.start()
-    if synchronous:
-        q.awaitTermination()
-    return q
+    return start_query(writer, synchronous, processingTime=f"{trigger_seconds} seconds")
 
 
 def run_alert_stream(
@@ -134,23 +148,7 @@ def run_alert_stream(
         .option("checkpointLocation", os.path.join(checkpoint_base, "alerts"))
         .outputMode("append")
     )
-    if synchronous:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if synchronous:
-        q.awaitTermination()
-    return q
-
-
-def debug_console_sink(df: DataFrame, label: str = "DEBUG", num_rows: int = 20):
-    """S6: the reference's ``.print("AGG")`` debug sinks
-    (CdcPipelineJob.java:74,85) — Spark's console format."""
-    return (
-        df.writeStream.format("console")
-        .option("numRows", str(num_rows))
-        .option("truncate", "true")
-        .queryName(label)
-    )
+    return start_query(writer, synchronous)
 
 
 def write_sorted_at_rest(df: DataFrame, out_dir: str, month_col: str = "month") -> None:

@@ -17,11 +17,11 @@ upsert instead.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cdc_realtime_pipeline_spark.operators.maintenance import swap_in
+from cdc_realtime_pipeline_spark.streaming.job import start_query
 
 
 def latency_partials(batch_df: DataFrame) -> DataFrame:
@@ -52,12 +52,7 @@ def start_latency_mv(
     writer = parsed_stream.writeStream.foreachBatch(upsert).option(
         "checkpointLocation", checkpoint_dir
     )
-    if synchronous:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if synchronous:
-        q.awaitTermination()
-    return q
+    return start_query(writer, synchronous)
 
 
 def _merge_latency(partials: DataFrame) -> DataFrame:
@@ -89,19 +84,10 @@ def read_latency_mv(spark: SparkSession, mv_dir: str) -> DataFrame:
 
 def compact_latency_mv(spark: SparkSession, mv_dir: str) -> None:
     """Fold accumulated partials into one row per minute (the merge the
-    MergeTree engine does in the background). Staged rewrite: the
-    compacted table is written aside, the live directory is renamed
-    away, the staged one renamed into place, and the old copy deleted
-    last — a failed swap restores the old directory, so readers never
-    lose partials."""
+    MergeTree engine does in the background), written aside and
+    swapped in by ``maintenance.swap_in`` — a failed swap keeps the
+    old partials live, so readers never lose them."""
     base = mv_dir.rstrip("/")
-    tmp, old = base + "__compact_tmp", base + "__compact_old"
+    tmp = base + "__compact_tmp"
     _merge_latency(spark.read.parquet(base)).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)  # left by an interrupted swap
-    os.rename(base, old)
-    try:
-        os.rename(tmp, base)
-    except BaseException:
-        os.rename(old, base)
-        raise
-    shutil.rmtree(old)
+    swap_in(tmp, base)

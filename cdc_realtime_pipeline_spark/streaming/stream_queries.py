@@ -8,12 +8,16 @@ input is finite and deterministic, two of them are *oracle-gated
 streaming queries*: the streaming windowed aggregate must equal the
 batch answer DuckDB computes — the strongest cross-engine check the
 streaming runtime can get.
+
+The plumbing is defined once: ``_fixture_stream`` is the file stream
+over a fixture table, ``_cdc_topic`` the synthesized CDC topic,
+``_memory_sink`` / ``_drained_update_log`` the two sinks, and every
+query starts through ``job.start_query``.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +33,7 @@ from cdc_realtime_pipeline_spark.session import (
     convert_ns_timestamps,
     load_table,
     raw_schema,
+    register_session_cache,
     scratch_dir,
 )
 from cdc_realtime_pipeline_spark.operators import curation as _curation_oracles
@@ -54,13 +59,19 @@ from cdc_realtime_pipeline_spark.sources.cdc_file_source import (
     write_cdc_json_files,
 )
 from cdc_realtime_pipeline_spark.streaming.anomaly_stateful import apply_anomaly_detector
+from cdc_realtime_pipeline_spark.streaming.job import (
+    read_merged_trade_agg,
+    run_cdc_fanout,
+    start_query,
+)
 
 # Synthesized CDC "topic" directories, keyed by (sf_dir, variant) —
 # the fixture is immutable within a session, so the JSON encode +
 # write happens once per variant instead of once per query invocation
 # (ADVICE r2 temp-dir leak + the bench creep on the CDC pair). Dirs
-# live under a session scratch root and are removed at exit.
-_TOPIC_CACHE: dict[tuple[str, str], str] = {}
+# live under a session scratch root and are removed at exit;
+# release_memos() clears the cache, so the next call rewrites them.
+_TOPIC_CACHE: dict[tuple[str, str], str] = register_session_cache({})
 
 
 def _cdc_topic(spark: SparkSession, sf_dir: str, variant: str = "plain") -> str:
@@ -118,6 +129,20 @@ def _scaled_state_partitions(spark, src) -> int:
     return min(cores, max(min(cores, 4), -(-_src_bytes(src) // (32 << 20))))
 
 
+def _fixture_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Fixture table ``name`` as a parquet file stream — the source of
+    every streaming twin over a fixture table. The file-stream source
+    needs a directory, so it reads ``sf_dir`` filtered to the one
+    table file (one file ⇒ one micro-batch under availableNow), with
+    the raw pre-conversion schema and the same timestamp
+    normalization as ``load_table``."""
+    return convert_ns_timestamps(
+        spark.readStream.schema(raw_schema(spark, sf_dir, name))
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
+
+
 def _memory_sink(df: DataFrame, output_mode: str, src=None) -> DataFrame:
     spark = df.sparkSession
     name = "q_" + uuid.uuid4().hex[:12]
@@ -126,14 +151,7 @@ def _memory_sink(df: DataFrame, output_mode: str, src=None) -> DataFrame:
     if src is not None:
         spark.conf.set(key, str(_scaled_state_partitions(spark, src)))
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        start_query(df.writeStream.format("memory").queryName(name).outputMode(output_mode))
     finally:
         if src is not None:
             spark.conf.set(key, old)
@@ -148,12 +166,7 @@ def stream_window_agg_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     output mode, finalized from the sink — the result must match the
     batch/DuckDB answer exactly, which is this query's oracle.
     """
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events_stream = _fixture_stream(spark, sf_dir, "events")
     agg = trade_partials(events_as_trades(events_stream))
     res = _memory_sink(agg, "complete", src=os.path.join(sf_dir, "events.parquet"))
     return round_trade_agg(finalize_trade_agg(res, "market", "window_start", "window_end"))
@@ -219,13 +232,8 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows must equal the batch answer, which is this query's oracle
     (same as ``sessionize_native``)."""
     from cdc_realtime_pipeline_spark.operators.extended import SESSION_GAP_MIN
-    from cdc_realtime_pipeline_spark.session import convert_ns_timestamps, raw_schema
 
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events_stream = _fixture_stream(spark, sf_dir, "events")
     agg = (
         events_stream.withWatermark("ts", "10 minutes")
         .groupBy(
@@ -288,6 +296,37 @@ WHERE value >= min_price
 """
 
 
+def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Each purchase ⋈ the same user's clicks in the preceding 10
+    minutes, as a ``how`` stream-stream join drained to a memory sink
+    (columns p_user, purchase_id, p_ts, c_user, click_id, c_ts). Both
+    sides carry 10-minute watermarks and the predicate bounds
+    event-time distance, so join state can be evicted."""
+    events_stream = _fixture_stream(spark, sf_dir, "events")
+
+    def side(kind: str, user: str, event_id: str, ts: str) -> DataFrame:
+        return (
+            events_stream.filter(F.col("event_type") == kind)
+            .select(
+                F.col("user_id").alias(user),
+                F.col("event_id").alias(event_id),
+                F.col("ts").alias(ts),
+            )
+            .withWatermark(ts, "10 minutes")
+        )
+
+    clicks = side("click", "c_user", "click_id", "c_ts")
+    purchases = side("purchase", "p_user", "purchase_id", "p_ts")
+    joined = purchases.join(
+        clicks,
+        (F.col("p_user") == F.col("c_user"))
+        & (F.col("c_ts") <= F.col("p_ts"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES")),
+        how,
+    )
+    return _memory_sink(joined, "append", src=os.path.join(sf_dir, "events.parquet"))
+
+
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream inner join: each purchase joined to
     the same user's clicks in the preceding 10 minutes. Both sides
@@ -296,37 +335,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream join. Finite deterministic input ⇒ oracle-gated
     against the identical batch range join.
     """
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    clicks = (
-        events_stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "10 minutes")
-    )
-    purchases = (
-        events_stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES")),
-    )
-    res = _memory_sink(joined, "append", src=os.path.join(sf_dir, "events.parquet"))
-    return res.select(
+    return _click_purchase_join(spark, sf_dir, "inner").select(
         F.col("p_user").alias("user_id"),
         "purchase_id",
         "click_id",
@@ -375,38 +384,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     store; the outer pass adds no extra shuffle, only the eviction
     scan that emits the null side.
     """
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    clicks = (
-        events_stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "10 minutes")
-    )
-    purchases = (
-        events_stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES")),
-        "leftOuter",
-    )
-    res = _memory_sink(joined, "append", src=os.path.join(sf_dir, "events.parquet"))
-    return res.select(
+    return _click_purchase_join(spark, sf_dir, "leftOuter").select(
         F.col("p_user").alias("user_id"),
         "purchase_id",
         "click_id",
@@ -433,38 +411,7 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: identical to the inner/left forms — user-keyed
     state bounded by the 10-minute event-time range either side.
     """
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    clicks = (
-        events_stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "10 minutes")
-    )
-    purchases = (
-        events_stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES")),
-        "fullOuter",
-    )
-    res = _memory_sink(joined, "append", src=os.path.join(sf_dir, "events.parquet"))
-    return res.select(
+    return _click_purchase_join(spark, sf_dir, "fullOuter").select(
         F.coalesce(F.col("p_user"), F.col("c_user")).alias("user_id"),
         "purchase_id",
         "click_id",
@@ -562,15 +509,8 @@ def stream_merged_trade_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Event time rides ``timestamp_millis(upbit_timestamp)`` (ms
     precision), so the oracle buckets on ms-truncated epoch too.
     """
-    import os
-    import tempfile
-
-    from cdc_realtime_pipeline_spark.streaming.job import (
-        read_merged_trade_agg,
-        run_cdc_fanout,
-    )
-
-    base = tempfile.mkdtemp(prefix="cdc_fanout_q_")  # sinks/ckpt: fresh per run
+    # sinks/ckpt: fresh per run, under the session scratch root
+    base = os.path.join(scratch_dir("cdc_fanout_q"), uuid.uuid4().hex[:8])
     run_cdc_fanout(
         spark,
         _cdc_topic(spark, sf_dir),
@@ -613,8 +553,8 @@ GROUP BY market, ws
 # the detector's memory-sink table per sf_dir: the full stateful run
 # costs ~8 s, and two registered queries consume it (the rows-only
 # alert stream and its oracle-gated rule-count twin) — one streaming
-# execution per session serves both
-_ALERTS_CACHE: dict[str, DataFrame] = {}
+# execution per session serves both; release_memos() clears it
+_ALERTS_CACHE: dict[str, DataFrame] = register_session_cache({})
 
 
 def stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -649,12 +589,8 @@ def _drained_update_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.mode("append").parquet(store)
 
     parsed = parse_cdc_events(read_cdc_stream(spark, _cdc_topic(spark, sf_dir, "apply")))
-    (
-        parsed.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", store + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    start_query(
+        parsed.writeStream.foreachBatch(_append).option("checkpointLocation", store + "_ckpt")
     )
     return spark.read.parquet(store)
 
@@ -682,22 +618,9 @@ def stream_docs_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflow-free, and it pins WHICH contents survived, not just how
     many. Oracle: the batch equivalent over the same table.
     """
-    import os
-
     from cdc_realtime_pipeline_spark.operators.dedup import _hash64, normalize_text
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    # the file-stream source requires a DIRECTORY; expose the fixture
-    # file through a per-session scratch dir via symlink (no copy)
-    d = os.path.join(
-        scratch_dir("docs_stream"), f"{abs(hash(sf_dir)) % 10**8:08d}"
-    )
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(path, link)
-    sch = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(sch).parquet(d)
+    raw = _fixture_stream(spark, sf_dir, "documents")
     gated = raw.filter(
         F.col("lang").isin("en", "de", "es") & F.col("n_chars").between(100, 10000)
     ).select(
@@ -705,7 +628,7 @@ def stream_docs_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(normalize_text(F.col("text"))).alias("content_hash"),
     )
     deduped = gated.dropDuplicates(["source", "content_hash"])
-    res = _memory_sink(deduped, "append", src=d)
+    res = _memory_sink(deduped, "append", src=os.path.join(sf_dir, "documents.parquet"))
     return (
         res.withColumn("h", _hash64(F.col("content_hash"), 23))
         .groupBy("source")
@@ -786,22 +709,12 @@ def stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens on the (tiny, hits-only) sink output, exactly where the
     batch operator aggregates.
     """
-    import os
-
     from cdc_realtime_pipeline_spark.operators.curation import (
         _BENCH_MOD,
         _CONTAM_MIN_SHARED,
         _all_shingles,
     )
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    d = os.path.join(
-        scratch_dir("decon_stream"), f"{abs(hash(sf_dir)) % 10**8:08d}"
-    )
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(path, link)
     bench = (
         _all_shingles(
             load_table(spark, sf_dir, "documents").filter(
@@ -811,11 +724,10 @@ def stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .select(F.col("doc_id").alias("bench_doc"), "shingle")
     )
-    sch = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(sch).parquet(d)
+    raw = _fixture_stream(spark, sf_dir, "documents")
     train = _all_shingles(raw.filter(F.col("doc_id") % _BENCH_MOD != 0))
     hits = train.join(F.broadcast(bench), "shingle")
-    res = _memory_sink(hits, "append", src=d)
+    res = _memory_sink(hits, "append", src=os.path.join(sf_dir, "documents.parquet"))
     return (
         res.groupBy("doc_id")
         .agg(
@@ -916,12 +828,7 @@ def stream_ohlc_bars_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from cdc_realtime_pipeline_spark.operators.timeseries import _r4, ohlc_bars
 
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events_stream = _fixture_stream(spark, sf_dir, "events")
     ev = events_stream.select(
         "ts",
         "event_id",
@@ -983,12 +890,9 @@ def stream_value_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_early"))
     )
 
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    ).select("event_type", "value", F.unix_micros("ts").alias("us"))
+    events_stream = _fixture_stream(spark, sf_dir, "events").select(
+        "event_type", "value", F.unix_micros("ts").alias("us")
+    )
     late_counts = (
         events_stream.crossJoin(F.broadcast(bounds))
         .filter(F.col("us") * 2 >= F.col("tmin") + F.col("tmax"))
@@ -1040,12 +944,7 @@ def stream_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         cusum_from_hourly,
     )
 
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events_stream = _fixture_stream(spark, sf_dir, "events")
     hourly_s = events_stream.groupBy(
         F.col("event_type"),
         F.expr("unix_micros(ts) div 3600000000").alias("hb"),
@@ -1074,12 +973,7 @@ def stream_sprt_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         sprt_from_hourly,
     )
 
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events_stream = _fixture_stream(spark, sf_dir, "events")
     hourly_s = events_stream.groupBy(
         F.col("event_type"),
         F.expr("unix_micros(ts) div 3600000000").alias("hb"),
@@ -1106,12 +1000,7 @@ def stream_open_interval_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         interval_deltas,
     )
 
-    orders_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "orders"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
-    )
+    orders_stream = _fixture_stream(spark, sf_dir, "orders")
     daily_s = interval_deltas(orders_stream).groupBy("d").agg(
         F.sum("delta").cast("long").alias("net"),
         F.count_if(F.col("delta") == 1).cast("long").alias("n_opened"),
@@ -1134,12 +1023,7 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     board is deterministic. Oracle: the batch twin over the same
     finite input.
     """
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events_stream = _fixture_stream(spark, sf_dir, "events")
     agg = events_stream.groupBy(
         F.window("ts", "1 hour").alias("w"), "event_type"
     ).agg(F.count("*").alias("n"))
@@ -1191,12 +1075,7 @@ def stream_daily_users_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable-partial property is what lets an exact distinct survive
     as STREAM state where a raw user-id set would not.
     """
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events_stream = _fixture_stream(spark, sf_dir, "events")
     daily = (
         events_stream.select(
             F.date_trunc("day", "ts").alias("day"),
@@ -1304,8 +1183,6 @@ def cdc_python_datasource_write_roundtrip(
     lossless through the bespoke transport in BOTH directions. The
     commit/abort protocol itself is pytest-pinned (no visible output
     before commit; abort removes staging)."""
-    import os
-
     from cdc_realtime_pipeline_spark.sources.cdc_python_datasource import register
 
     register(spark)
@@ -1408,12 +1285,7 @@ def stream_cep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays the backfill path — this is the tail path of the classic
     lambda split.
     """
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events_stream = _fixture_stream(spark, sf_dir, "events")
     ev = events_stream.select(
         "user_id",
         "event_id",
@@ -1471,11 +1343,7 @@ def stream_window_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     make this < 5), pinning that the chain aggregates the fine
     windows themselves, not re-scanned raw events.
     """
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events_stream = _fixture_stream(spark, sf_dir, "events")
     w1 = (
         events_stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 minute").alias("w1"), "event_type")
@@ -1543,12 +1411,7 @@ def stream_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         _hex_uniform,
     )
 
-    events_stream = convert_ns_timestamps(
-        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events_stream = _fixture_stream(spark, sf_dir, "events")
     fan = events_stream.select("user_id").withColumn(
         "d", F.explode(F.sequence(F.lit(0), F.lit(_CMS_D - 1)))
     ).withColumn(

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_realtime_pipeline_spark.operators.maintenance import (
@@ -135,3 +136,47 @@ def test_wap_publishes_only_after_audits_pass(spark, tmp_path):
     v2 = spark.createDataFrame([(3, "c")], "id long, name string")
     assert write_audit_publish(spark, v2, t, [no_null_names]) == 1
     assert {r["id"] for r in spark.read.parquet(t).collect()} == {3}
+
+
+@pytest.mark.parametrize(
+    "op", ["compact_partition", "backfill_partition", "write_audit_publish"]
+)
+def test_refused_swap_in_keeps_live_rows(spark, tmp_path, monkeypatch, op):
+    # the staged data cannot be renamed into place: the live
+    # partition/table must still read its old rows, and a retry
+    # publishes
+    from cdc_realtime_pipeline_spark.operators.maintenance import (
+        backfill_partition,
+        write_audit_publish,
+    )
+
+    t = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, "202401"), (2, "202401")], "id long, month string"
+    ).write.partitionBy("month").parquet(t)
+    live = os.path.join(t, "month=202401")
+    new = spark.createDataFrame([(3,)], "id long")
+    run = {
+        "compact_partition": lambda: compact_partition(spark, t, "202401"),
+        "backfill_partition": lambda: backfill_partition(spark, t, "202401", new),
+        "write_audit_publish": lambda: write_audit_publish(spark, new, live, []),
+    }[op]
+
+    def ids():
+        return sorted(r["id"] for r in spark.read.parquet(live).collect())
+
+    real_rename = os.rename
+
+    def refuse_swap_in(src, dst, *args, **kwargs):
+        if str(src).endswith(("__compact_tmp", "__backfill_tmp", "__wap_stage")):
+            raise OSError("injected rename failure")
+        return real_rename(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "rename", refuse_swap_in)
+    with pytest.raises(OSError, match="injected"):
+        run()
+    monkeypatch.undo()
+    assert ids() == [1, 2]
+
+    run()
+    assert ids() == ([1, 2] if op == "compact_partition" else [3])

@@ -333,3 +333,37 @@ def test_stream_topk_per_window_board_invariants(spark, sf_dir):
         # counts non-increasing down the board; equal counts ordered by type
         for a, b in zip(board, board[1:]):
             assert a.n > b.n or (a.n == b.n and a.event_type < b.event_type)
+
+
+def test_release_memos_clears_stream_caches():
+    # the synthesized-topic and detector-output caches ride the same
+    # static-fixture assumption as the memos: release_memos() must
+    # clear them so the next call rebuilds instead of re-serving
+    from cdc_realtime_pipeline_spark.session import release_memos
+    from cdc_realtime_pipeline_spark.streaming.stream_queries import (
+        _ALERTS_CACHE,
+        _TOPIC_CACHE,
+    )
+
+    _TOPIC_CACHE[("/tmp/fake_dir", "plain")] = "/tmp/fake_topic"
+    _ALERTS_CACHE["/tmp/fake_dir"] = None
+    release_memos()
+    assert not _TOPIC_CACHE
+    assert not _ALERTS_CACHE
+
+
+def test_stream_merged_trade_agg_leaves_no_temp_dir(spark, sf_dir):
+    # sinks and checkpoint live under the session scratch root, not in
+    # a fresh mkdtemp per call
+    from cdc_realtime_pipeline_spark.streaming.stream_queries import (
+        stream_merged_trade_agg,
+    )
+
+    def fanout_dirs():
+        return {
+            d for d in os.listdir(tempfile.gettempdir()) if d.startswith("cdc_fanout_q_")
+        }
+
+    before = fanout_dirs()
+    assert stream_merged_trade_agg(spark, sf_dir).count() > 0
+    assert fanout_dirs() == before

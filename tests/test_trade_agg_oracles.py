@@ -5,8 +5,10 @@ The batch, salted, hourly-rollup, streaming and fan-out forms of the
 trade window aggregate share one partial/merge/finalize definition
 (operators/window_agg.py); the batch, streaming and Python-DataSource
 round-trips, current-state and version views of the CDC change log
-share one definition (operators/cdc_ops.py). Each registered query
-must still match its registry oracle by row count and
+share one definition (operators/cdc_ops.py); every other oracle-gated
+streaming twin shares one streaming scaffold
+(streaming/stream_queries.py, streaming/job.py). Each registered
+query must still match its registry oracle by row count and
 order-insensitive value hash — the same comparison
 ``tools/check_correctness.py`` makes.
 """
@@ -51,18 +53,45 @@ CDC_LOG_QUERIES = [
 ]
 
 
+# the other oracle-gated streaming twins: each runs through the shared
+# fixture-table stream or CDC topic, the memory sink and the launcher
+STREAM_TWIN_QUERIES = [
+    "stream_countmin_sketch",
+    "stream_window_chain",
+    "stream_daily_users_bitmap",
+    "stream_cep_funnel",
+    "stream_topk_per_window",
+    "stream_ohlc_bars_5m",
+    "stream_value_drift_gate",
+    "stream_cusum_alarm",
+    "stream_sprt_alarm",
+    "stream_open_interval_depth",
+    "stream_dedup_counts",
+    "stream_dedup_watermarked",
+    "stream_sessionize",
+    "stream_static_enrich",
+    "stream_stream_join",
+    "stream_stream_left_outer",
+    "stream_stream_full_outer",
+    "stream_anomaly_rule_counts",
+    "stream_docs_quality_gate",
+    "stream_decontaminate_gate",
+]
+
+
 @pytest.fixture(scope="module")
 def duck(sf_dir):
     import duckdb
 
     con = duckdb.connect()
-    p = os.path.join(sf_dir, "events.parquet")
-    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{p}')")
+    for table in ("events", "orders", "documents"):
+        p = os.path.join(sf_dir, f"{table}.parquet")
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{p}')")
     yield con
     con.close()
 
 
-@pytest.mark.parametrize("name", TRADE_AGG_QUERIES + CDC_LOG_QUERIES)
+@pytest.mark.parametrize("name", TRADE_AGG_QUERIES + CDC_LOG_QUERIES + STREAM_TWIN_QUERIES)
 def test_trade_agg_matches_oracle(spark, sf_dir, duck, name):
     sdf = all_queries()[name](spark, sf_dir)
     srows = [r[:] for r in sdf.collect()]
