@@ -307,7 +307,7 @@ def latency_mv_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     AggregatingMergeTree: the inner aggregation is the incrementally
     maintainable partial state; the outer select finalizes. In the
     streaming engine the inner table is maintained by
-    ``streaming.mv.latency_mv_stream`` via foreachBatch upsert.
+    ``streaming.mv.start_latency_mv``, one partials batch per micro-batch.
     """
     partials = (
         _events(spark, sf_dir)

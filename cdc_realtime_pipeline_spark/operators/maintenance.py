@@ -13,8 +13,9 @@ layout (SURVEY.md §2.1 S7, §4 "TTL-based retention"):
   (streaming micro-batches leave one file per trigger) into few
   — the OPTIMIZE analog.
 
-Both operate on the ``month=yyyyMM`` layout the streaming sinks write
-(streaming/job.py).
+Both operate on a ``month=yyyyMM`` layout: a month-first table, or one
+``batch=<id>/`` directory of the streaming raw sink (streaming/job.py).
+Staged copies get ``.``-prefixed names, which Spark's file index skips.
 """
 
 from __future__ import annotations
@@ -54,24 +55,29 @@ def retention_horizon(months: list[str], keep_last: int) -> list[str]:
     return sorted(months)[-keep_last:]
 
 
+def _hidden(path: str, tag: str) -> str:
+    """A sibling of ``path`` that readers of its parent skip."""
+    head, name = os.path.split(path)
+    return os.path.join(head, f".{name}.{tag}")
+
+
 def swap_in(staged: str, live: str) -> None:
     """Replace directory ``live`` with the fully written ``staged`` one
-    — the staged swap compaction, backfill, write-audit-publish and
-    the latency-MV compaction share. The live directory is renamed
-    aside, the staged one renamed into place, and the old copy deleted
-    last; if the swap-in rename fails the old directory is renamed
-    back, so the live path keeps its old contents. ``live`` may not
-    exist yet (a first publish).
+    — the staged swap compaction, backfill and write-audit-publish
+    share. The live directory is renamed aside, the staged one renamed
+    into place, and the old copy deleted last; if the swap-in rename
+    fails the old directory is renamed back, so the live path keeps its
+    old contents. ``live`` may not exist yet (a first publish).
 
     Readers see complete-old, complete-new, or a retryable
     path-not-found during the brief window between the two renames —
     never a PARTIAL directory. A crash inside that window leaves the
-    old data intact at ``<live>__swap_old`` rather than stranded.
+    old data intact at ``.<live>.swap_old`` rather than stranded.
     Directory rename is only atomic within one POSIX filesystem; on an
     object store use a manifest/symlink swap or a table format's
     metadata commit (Delta/Iceberg) instead.
     """
-    old = live + "__swap_old"
+    old = _hidden(live, "swap_old")
     shutil.rmtree(old, ignore_errors=True)  # left by an interrupted swap
     if not os.path.exists(live):
         os.rename(staged, live)
@@ -92,7 +98,7 @@ def compact_partition(spark: SparkSession, table_dir: str, month: str, target_fi
     """
     part_dir = os.path.join(table_dir, f"month={month}")
     n_before = sum(1 for f in os.listdir(part_dir) if f.endswith(".parquet"))
-    tmp = part_dir + "__compact_tmp"
+    tmp = _hidden(part_dir, "compact")
     spark.read.parquet(part_dir).coalesce(target_files).write.mode("overwrite").parquet(tmp)
     swap_in(tmp, part_dir)
     return n_before
@@ -112,7 +118,7 @@ def backfill_partition(spark: SparkSession, table_dir: str, month: str, df) -> i
     retries).
     """
     part_dir = os.path.join(table_dir, f"month={month}")
-    tmp = part_dir + "__backfill_tmp"
+    tmp = _hidden(part_dir, "backfill")
     n = df.count()
     df.write.mode("overwrite").parquet(tmp)
     swap_in(tmp, part_dir)
@@ -152,7 +158,7 @@ def write_audit_publish(spark: SparkSession, df, table_dir: str, audits) -> int:
     the staging write is the same cost as the direct write — WAP buys
     the gate for free modulo one rename.
     """
-    tmp = table_dir + "__wap_stage"
+    tmp = _hidden(table_dir, "wap_stage")
     df.write.mode("overwrite").parquet(tmp)
     staged = spark.read.parquet(tmp)
     for audit in audits:

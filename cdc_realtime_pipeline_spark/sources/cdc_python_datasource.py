@@ -94,6 +94,15 @@ def _target_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _topic_files(path: str) -> list[str]:
+    """Paths of the topic's ``part-*`` files in partition order."""
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.startswith("part-") and not f.endswith(".crc")
+    )
+
+
 def _file_splits(data: bytes, split_bytes: int):
     """Cut ``data`` (one topic file) at the first newline at/after each
     ``split_bytes`` mark. Yields (byte_start, byte_end, line_start)
@@ -138,12 +147,7 @@ class CdcEnvelopeReader(DataSourceReader):
         self._partition_pred = None  # (op, value) pruning on `partition`
         # 0/unset → derive from topic size and target parallelism;
         # negative → disable splitting (legacy one-partition-per-file)
-        self._split_bytes = int(
-            options.get(
-                "split_bytes",
-                os.environ.get("SPARK_GRAFT_PYDS_SPLIT_BYTES", "0"),
-            )
-        )
+        self._split_bytes = int(options.get("split_bytes", "0"))
 
     def pushFilters(self, filters):
         """Spark-4.1 filter pushdown (SPARK-48788 family): the payload
@@ -154,24 +158,21 @@ class CdcEnvelopeReader(DataSourceReader):
         subscribing to specific partitions. Supported filters are
         consumed here and visible to ``partitions()``; everything else
         is returned for Spark to evaluate post-scan."""
+        import operator
+
         from pyspark.sql.datasource import EqualTo, GreaterThan, LessThan
 
+        ops = {EqualTo: operator.eq, GreaterThan: operator.gt, LessThan: operator.lt}
         remaining = []
         for f in filters:
-            kind = None
-            if isinstance(f, EqualTo):
-                kind = "="
-            elif isinstance(f, GreaterThan):
-                kind = ">"
-            elif isinstance(f, LessThan):
-                kind = "<"
+            op = ops.get(type(f))
             if (
-                kind is not None
+                op is not None
                 and tuple(f.attribute) == ("partition",)
                 and isinstance(f.value, int)
                 and self._partition_pred is None
             ):
-                self._partition_pred = (kind, f.value)
+                self._partition_pred = (op, f.value)
             else:
                 remaining.append(f)
         return remaining
@@ -183,21 +184,10 @@ class CdcEnvelopeReader(DataSourceReader):
         # sub-splits (round 13): `partition` stays the file index and
         # `offset` the within-FILE line number, so the Kafka contract is
         # unchanged — only the task granularity moves.
-        files = sorted(
-            f
-            for f in os.listdir(self._path)
-            if f.startswith("part-") and not f.endswith(".crc")
-        )
-        keep_files = list(enumerate(files))
+        paths = list(enumerate(_topic_files(self._path)))
         if self._partition_pred is not None:
             op, v = self._partition_pred
-            keep = {
-                "=": lambda i: i == v,
-                ">": lambda i: i > v,
-                "<": lambda i: i < v,
-            }[op]
-            keep_files = [(i, f) for i, f in keep_files if keep(i)]
-        paths = [(i, os.path.join(self._path, f)) for i, f in keep_files]
+            paths = [(i, p) for i, p in paths if op(i, v)]
         if self._split_bytes < 0:
             return [InputPartition((i, p, None, None, 0)) for i, p in paths]
         sizes = {p: os.path.getsize(p) for _, p in paths}
@@ -283,13 +273,6 @@ class CdcEnvelopeStreamReader(SimpleDataSourceStreamReader):
             raise ValueError("cdc_envelope requires option 'path'")
         self._path = path
 
-    def _files(self) -> list[str]:
-        return sorted(
-            os.path.join(self._path, f)
-            for f in os.listdir(self._path)
-            if f.startswith("part-") and not f.endswith(".crc")
-        )
-
     @staticmethod
     def _emit(idx: int, fpath: str) -> list[tuple]:
         out = []
@@ -306,18 +289,14 @@ class CdcEnvelopeStreamReader(SimpleDataSourceStreamReader):
         return {"files_read": 0}
 
     def read(self, start: dict):
-        files = self._files()
-        out: list[tuple] = []
-        for i in range(start["files_read"], len(files)):
-            out.extend(self._emit(i, files[i]))
-        return (out, {"files_read": len(files)})
+        files = _topic_files(self._path)
+        return self._rows(files, start["files_read"], len(files)), {"files_read": len(files)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        files = self._files()
-        out: list[tuple] = []
-        for i in range(start["files_read"], end["files_read"]):
-            out.extend(self._emit(i, files[i]))
-        return out
+        return self._rows(_topic_files(self._path), start["files_read"], end["files_read"])
+
+    def _rows(self, files: list[str], lo: int, hi: int) -> list[tuple]:
+        return [row for i in range(lo, hi) for row in self._emit(i, files[i])]
 
 
 class _CdcCommit(WriterCommitMessage):

@@ -5,14 +5,14 @@ AggregatingMergeTree MV (``mv_latency_stats`` with avg/max/min/count
 *State combinators, merged at read — clickhouse/init.sql:81-94,
 SURVEY.md §2.3 A8).
 
-Spark restatement: each micro-batch appends its per-minute **partials**
+Spark restatement: each micro-batch writes its per-minute **partials**
 (sum, count, min, max — the associative state the *State combinators
-carry) to a summary parquet table; reads merge partials and finalize
-(avg = Σsum/Σcount). Append-only partials + merge-at-read is exactly
-the AggregatingMergeTree contract, needs no stream-side state, and a
-periodic compaction (``compact_latency_mv``) keeps the partial count
-bounded — on a Delta/Iceberg deployment the compaction becomes a MERGE
-upsert instead.
+carry) as one batch of a batch-keyed table (streaming/job.py); reads
+merge partials and finalize (avg = Σsum/Σcount). Partials +
+merge-at-read is exactly the AggregatingMergeTree contract and needs no
+stream-side state. ``compact_latency_mv`` folds the partials into one
+row per minute — the background merge — and is safe while the MV query
+runs; on a Delta/Iceberg deployment it becomes a MERGE upsert instead.
 """
 
 from __future__ import annotations
@@ -20,8 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_realtime_pipeline_spark.operators.maintenance import swap_in
-from cdc_realtime_pipeline_spark.streaming.job import start_query
+from cdc_realtime_pipeline_spark.streaming.job import (
+    compact_batches,
+    read_batches,
+    start_batch_sinks,
+)
 
 
 def latency_partials(batch_df: DataFrame) -> DataFrame:
@@ -45,14 +48,7 @@ def start_latency_mv(
     synchronous: bool = True,
 ):
     """Maintain the MV from a parsed CDC stream via foreachBatch."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        latency_partials(batch_df).write.mode("append").parquet(mv_dir)
-
-    writer = parsed_stream.writeStream.foreachBatch(upsert).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return start_query(writer, synchronous)
+    return start_batch_sinks(parsed_stream, {mv_dir: latency_partials}, checkpoint_dir, synchronous)
 
 
 def _merge_latency(partials: DataFrame) -> DataFrame:
@@ -70,7 +66,7 @@ def read_latency_mv(spark: SparkSession, mv_dir: str) -> DataFrame:
     """Merge-at-read: finalize avg/min/max/count from partials
     (≙ avgMerge/minMerge/maxMerge/countMerge)."""
     return (
-        _merge_latency(spark.read.parquet(mv_dir))
+        _merge_latency(read_batches(spark, mv_dir))
         .select(
             "minute",
             (F.col("sum_latency") / F.col("cnt")).alias("avg_latency"),
@@ -83,11 +79,6 @@ def read_latency_mv(spark: SparkSession, mv_dir: str) -> DataFrame:
 
 
 def compact_latency_mv(spark: SparkSession, mv_dir: str) -> None:
-    """Fold accumulated partials into one row per minute (the merge the
-    MergeTree engine does in the background), written aside and
-    swapped in by ``maintenance.swap_in`` — a failed swap keeps the
-    old partials live, so readers never lose them."""
-    base = mv_dir.rstrip("/")
-    tmp = base + "__compact_tmp"
-    _merge_latency(spark.read.parquet(base)).write.mode("overwrite").parquet(tmp)
-    swap_in(tmp, base)
+    """Fold the accumulated partials into one row per minute
+    (``job.compact_batches``); safe while the MV query runs."""
+    compact_batches(spark, mv_dir, _merge_latency)

@@ -60,8 +60,10 @@ from cdc_realtime_pipeline_spark.sources.cdc_file_source import (
 )
 from cdc_realtime_pipeline_spark.streaming.anomaly_stateful import apply_anomaly_detector
 from cdc_realtime_pipeline_spark.streaming.job import (
+    read_batches,
     read_merged_trade_agg,
     run_cdc_fanout,
+    start_batch_sinks,
     start_query,
 )
 
@@ -574,25 +576,15 @@ def stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _drained_update_log(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream the update-log topic through ``foreachBatch`` appends into
-    a fresh parquet store (availableNow) and return the log read back.
-    The store stays append-only; the current-state and version views
-    resolve at read time. On Delta/Iceberg the foreachBatch body would
-    be the MERGE itself."""
-    store = os.path.join(
-        scratch_dir("cdc_log_store"),
-        f"{abs(hash(sf_dir)) % 10**8:08d}",
-        uuid.uuid4().hex[:8],  # fresh store per run: appends accumulate
-    )
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(store)
-
+    """Stream the update-log topic through the batch-keyed
+    ``foreachBatch`` sink into a fresh parquet store (availableNow) and
+    return the log read back. The store keeps every change; the
+    current-state and version views resolve at read time. On
+    Delta/Iceberg the foreachBatch body would be the MERGE itself."""
+    store = os.path.join(scratch_dir("cdc_log_store"), uuid.uuid4().hex[:8])  # fresh per run
     parsed = parse_cdc_events(read_cdc_stream(spark, _cdc_topic(spark, sf_dir, "apply")))
-    start_query(
-        parsed.writeStream.foreachBatch(_append).option("checkpointLocation", store + "_ckpt")
-    )
-    return spark.read.parquet(store)
+    start_batch_sinks(parsed, {store: lambda b: b}, store + "_ckpt")
+    return read_batches(spark, store)
 
 
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,7 +8,6 @@ joins on key co-locate without a shuffle").
 from __future__ import annotations
 
 import io
-import tempfile
 from contextlib import redirect_stdout
 
 import pytest
@@ -19,8 +18,8 @@ from cdc_realtime_pipeline_spark.session import load_table
 
 
 @pytest.fixture(scope="module")
-def bucketed(spark, sf_dir):
-    wh = tempfile.mkdtemp(prefix="warehouse_")
+def bucketed(spark, sf_dir, tmp_path_factory):
+    wh = str(tmp_path_factory.mktemp("warehouse"))
     spark.sql(f"CREATE DATABASE IF NOT EXISTS bktdb LOCATION '{wh}'")
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")

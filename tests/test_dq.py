@@ -51,7 +51,7 @@ def test_hll_rollup_within_sketch_bound(spark, sf_dir):
     assert r["rel_err"] <= 0.05
 
 
-def test_psi_near_zero_for_identical_halves(spark):
+def test_psi_near_zero_for_identical_halves(spark, tmp_path):
     # synthetic: the same uniform value distribution in both halves →
     # every bin's p == q → PSI ~ 0 (exactly 0 up to ε-smoothing noise)
     import datetime
@@ -70,9 +70,7 @@ def test_psi_near_zero_for_identical_halves(spark):
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     )
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="psi_fixture_")
+    d = str(tmp_path)
     df.coalesce(1).write.mode("overwrite").parquet(f"{d}/events.parquet")
     [r] = value_distribution_psi(spark, d).collect()
     assert abs(r["psi"]) < 1e-3

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,8 +16,8 @@ from cdc_realtime_pipeline_spark.operators.maintenance import (
 from cdc_realtime_pipeline_spark.session import load_table
 
 
-def _partitioned_table(spark, sf_dir):
-    out = tempfile.mkdtemp(prefix="ttl_") + "/t"
+def _partitioned_table(spark, sf_dir, tmp_path):
+    out = str(tmp_path / "t")
     ev = load_table(spark, sf_dir, "events").withColumn(
         # spread fixture data over 3 synthetic months
         "month", F.concat(F.lit("2024"), F.lpad((F.col("event_id") % 3 + 1).cast("string"), 2, "0"))
@@ -27,8 +26,8 @@ def _partitioned_table(spark, sf_dir):
     return out
 
 
-def test_ttl_drops_only_expired_months(spark, sf_dir):
-    out = _partitioned_table(spark, sf_dir)
+def test_ttl_drops_only_expired_months(spark, sf_dir, tmp_path):
+    out = _partitioned_table(spark, sf_dir, tmp_path)
     months = list_month_partitions(out)
     assert months == ["202401", "202402", "202403"]
     keep = retention_horizon(months, keep_last=2)
@@ -40,15 +39,15 @@ def test_ttl_drops_only_expired_months(spark, sf_dir):
     assert left.select("month").distinct().count() == 2
 
 
-def test_ttl_idempotent(spark, sf_dir):
-    out = _partitioned_table(spark, sf_dir)
+def test_ttl_idempotent(spark, sf_dir, tmp_path):
+    out = _partitioned_table(spark, sf_dir, tmp_path)
     keep = retention_horizon(list_month_partitions(out), keep_last=2)
     drop_expired_partitions(out, keep)
     assert drop_expired_partitions(out, keep) == []  # second run: no-op
 
 
-def test_compaction_preserves_rows(spark, sf_dir):
-    out = _partitioned_table(spark, sf_dir)
+def test_compaction_preserves_rows(spark, sf_dir, tmp_path):
+    out = _partitioned_table(spark, sf_dir, tmp_path)
     part = os.path.join(out, "month=202401")
     before = spark.read.parquet(part).count()
     n_files = compact_partition(spark, out, "202401", target_files=1)
@@ -143,8 +142,8 @@ def test_wap_publishes_only_after_audits_pass(spark, tmp_path):
 )
 def test_refused_swap_in_keeps_live_rows(spark, tmp_path, monkeypatch, op):
     # the staged data cannot be renamed into place: the live
-    # partition/table must still read its old rows, and a retry
-    # publishes
+    # partition/table must still read its old rows, a reader of the
+    # whole table must not see the staged copy, and a retry publishes
     from cdc_realtime_pipeline_spark.operators.maintenance import (
         backfill_partition,
         write_audit_publish,
@@ -166,9 +165,13 @@ def test_refused_swap_in_keeps_live_rows(spark, tmp_path, monkeypatch, op):
         return sorted(r["id"] for r in spark.read.parquet(live).collect())
 
     real_rename = os.rename
+    refused = []
 
     def refuse_swap_in(src, dst, *args, **kwargs):
-        if str(src).endswith(("__compact_tmp", "__backfill_tmp", "__wap_stage")):
+        # the first rename onto the live path is the swap-in; the
+        # second is the restore
+        if str(dst) == live and not refused:
+            refused.append(src)
             raise OSError("injected rename failure")
         return real_rename(src, dst, *args, **kwargs)
 
@@ -177,6 +180,8 @@ def test_refused_swap_in_keeps_live_rows(spark, tmp_path, monkeypatch, op):
         run()
     monkeypatch.undo()
     assert ids() == [1, 2]
+    table = sorted((r["id"], r["month"]) for r in spark.read.parquet(t).collect())
+    assert table == [(1, 202401), (2, 202401)]
 
     run()
     assert ids() == ([1, 2] if op == "compact_partition" else [3])

@@ -15,11 +15,15 @@ from cdc_realtime_pipeline_spark.cdc.envelope import (
     synthesize_cdc_json_from_events,
 )
 from cdc_realtime_pipeline_spark.session import load_table
+from cdc_realtime_pipeline_spark.operators.window_agg import merge_trade_partials
 from cdc_realtime_pipeline_spark.sources.cdc_file_source import (
     read_cdc_batch,
+    read_cdc_stream,
     write_cdc_json_files,
 )
 from cdc_realtime_pipeline_spark.streaming.job import (
+    compact_batches,
+    read_batches,
     read_merged_trade_agg,
     run_alert_stream,
     run_cdc_fanout,
@@ -32,17 +36,17 @@ from cdc_realtime_pipeline_spark.streaming.mv import (
 )
 
 
-def _make_stream(spark, sf_dir):
+def _make_stream(spark, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events")
-    d = tempfile.mkdtemp(prefix="cdc_in_")
+    d = str(tmp_path / "cdc_in")
     write_cdc_json_files(synthesize_cdc_json_from_events(events), d)
     return d, events.count()
 
 
-def test_fanout_raw_and_agg_sinks(spark, sf_dir):
-    stream_dir, n_events = _make_stream(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="cdc_out_")
-    ckpt = tempfile.mkdtemp(prefix="cdc_ck_")
+def test_fanout_raw_and_agg_sinks(spark, sf_dir, tmp_path):
+    stream_dir, n_events = _make_stream(spark, sf_dir, tmp_path)
+    out = str(tmp_path / "cdc_out")
+    ckpt = str(tmp_path / "cdc_ck")
 
     run_cdc_fanout(spark, stream_dir, out, ckpt)
 
@@ -70,27 +74,27 @@ def test_fanout_raw_and_agg_sinks(spark, sf_dir):
     assert got["amt"] == want["amt"]
 
 
-def test_fanout_exactly_once_on_restart(spark, sf_dir):
+def test_fanout_exactly_once_on_restart(spark, sf_dir, tmp_path):
     # re-running with the same checkpoint must not duplicate output (W9)
-    stream_dir, n_events = _make_stream(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="cdc_out_")
-    ckpt = tempfile.mkdtemp(prefix="cdc_ck_")
+    stream_dir, n_events = _make_stream(spark, sf_dir, tmp_path)
+    out = str(tmp_path / "cdc_out")
+    ckpt = str(tmp_path / "cdc_ck")
     run_cdc_fanout(spark, stream_dir, out, ckpt)
     run_cdc_fanout(spark, stream_dir, out, ckpt)  # restart, nothing new
     raw = spark.read.parquet(os.path.join(out, "crypto_trades"))
     assert raw.count() == n_events
 
 
-def test_alert_stream_matches_pure_function(spark, sf_dir):
+def test_alert_stream_matches_pure_function(spark, sf_dir, tmp_path):
     import pandas as pd
 
     from cdc_realtime_pipeline_spark.streaming.anomaly_stateful import (
         detect_anomalies_batch_of_key,
     )
 
-    stream_dir, _ = _make_stream(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="cdc_out_")
-    ckpt = tempfile.mkdtemp(prefix="cdc_ck_")
+    stream_dir, _ = _make_stream(spark, sf_dir, tmp_path)
+    out = str(tmp_path / "cdc_out")
+    ckpt = str(tmp_path / "cdc_ck")
     run_alert_stream(spark, stream_dir, out, ckpt)
     got = (
         spark.read.parquet(os.path.join(out, "anomaly_alerts"))
@@ -112,7 +116,7 @@ def test_alert_stream_matches_pure_function(spark, sf_dir):
     assert got_set == want_set
 
 
-def test_snapshot_union_tail_backfill(spark, sf_dir):
+def test_snapshot_union_tail_backfill(spark, sf_dir, tmp_path):
     # S2: Debezium's snapshot-then-tail ≙ batch backfill ∪ streaming
     # tail (SURVEY.md §2.1). Split the topic files in two; batch-read
     # the "snapshot" half, stream the "tail" half, union must equal a
@@ -122,11 +126,13 @@ def test_snapshot_union_tail_backfill(spark, sf_dir):
 
     from cdc_realtime_pipeline_spark.streaming.stream_queries import _memory_sink
 
-    stream_dir, n_events = _make_stream(spark, sf_dir)
+    stream_dir, n_events = _make_stream(spark, sf_dir, tmp_path)
     files = sorted(glob.glob(os.path.join(stream_dir, "part-*")))
     assert len(files) >= 2
-    snap_dir = tempfile.mkdtemp(prefix="snap_")
-    tail_dir = tempfile.mkdtemp(prefix="tail_")
+    snap_dir = str(tmp_path / "snap")
+    tail_dir = str(tmp_path / "tail")
+    os.makedirs(snap_dir)
+    os.makedirs(tail_dir)
     half = len(files) // 2
     for f in files[:half]:
         shutil.copy(f, snap_dir)
@@ -141,15 +147,15 @@ def test_snapshot_union_tail_backfill(spark, sf_dir):
     assert combined.select("sequential_id").distinct().count() == n_events
 
 
-def test_sorted_at_rest_layout(spark, sf_dir):
+def test_sorted_at_rest_layout(spark, sf_dir, tmp_path):
     # O4: MergeTree ORDER BY layout — files sorted by (market, ts, id)
     from cdc_realtime_pipeline_spark.streaming.job import write_sorted_at_rest
 
-    stream_dir, _ = _make_stream(spark, sf_dir)
+    stream_dir, _ = _make_stream(spark, sf_dir, tmp_path)
     parsed = parse_cdc_events(read_cdc_batch(spark, stream_dir)).withColumn(
         "ts", F.timestamp_millis("upbit_timestamp")
     )
-    out = tempfile.mkdtemp(prefix="sorted_") + "/t"
+    out = str(tmp_path / "sorted")
     write_sorted_at_rest(parsed.withColumn("month", F.date_format("ts", "yyyyMM")), out)
     # within any single file, rows must be non-decreasing on the sort key
     import glob as g
@@ -160,7 +166,7 @@ def test_sorted_at_rest_layout(spark, sf_dir):
     assert key == sorted(key)
 
 
-def test_stateful_alert_stream_recovers_state_across_restart(spark, sf_dir):
+def test_stateful_alert_stream_recovers_state_across_restart(spark, sf_dir, tmp_path):
     # W9 for the stateful path: stop after half the input, restart from
     # the checkpoint with the rest — alerts must equal a one-shot run
     # (PRICE_SPIKE/EMA state crosses the restart boundary)
@@ -174,12 +180,13 @@ def test_stateful_alert_stream_recovers_state_across_restart(spark, sf_dir):
     first = events.filter(F.col("event_id") <= median)
     second = events.filter(F.col("event_id") > median)
 
-    staged = tempfile.mkdtemp(prefix="staged_")
-    out = tempfile.mkdtemp(prefix="alerts_out_")
-    ckpt = tempfile.mkdtemp(prefix="alerts_ck_")
+    staged = str(tmp_path / "staged")
+    os.makedirs(staged)
+    out = str(tmp_path / "alerts_out")
+    ckpt = str(tmp_path / "alerts_ck")
 
     def _stage(df, tag):
-        d = tempfile.mkdtemp(prefix=f"half_{tag}_")
+        d = str(tmp_path / f"half_{tag}")
         write_cdc_json_files(synthesize_cdc_json_from_events(df), d)
         for i, f in enumerate(sorted(os.listdir(d))):
             if not f.startswith("part-"):
@@ -196,9 +203,9 @@ def test_stateful_alert_stream_recovers_state_across_restart(spark, sf_dir):
         for r in spark.read.parquet(os.path.join(out, "anomaly_alerts")).collect()
     }
 
-    out2 = tempfile.mkdtemp(prefix="alerts_once_")
-    ck2 = tempfile.mkdtemp(prefix="alerts_onceck_")
-    oneshot_dir = tempfile.mkdtemp(prefix="oneshot_src_")
+    out2 = str(tmp_path / "alerts_once")
+    ck2 = str(tmp_path / "alerts_onceck")
+    oneshot_dir = str(tmp_path / "oneshot_src")
     write_cdc_json_files(synthesize_cdc_json_from_events(events), oneshot_dir)
     run_alert_stream(spark, oneshot_dir, out2, ck2)
     oneshot = {
@@ -208,13 +215,13 @@ def test_stateful_alert_stream_recovers_state_across_restart(spark, sf_dir):
     assert restarted == oneshot
 
 
-def test_corrupt_records_mid_stream_do_not_kill_the_query(spark, sf_dir):
+def test_corrupt_records_mid_stream_do_not_kill_the_query(spark, sf_dir, tmp_path):
     # failure-injection analog (SURVEY §5): malformed JSON lines and
     # tombstones interleaved with good events — the stream completes
     # and parses exactly the good rows
     from cdc_realtime_pipeline_spark.streaming.stream_queries import _memory_sink
 
-    stream_dir, n_events = _make_stream(spark, sf_dir)
+    stream_dir, n_events = _make_stream(spark, sf_dir, tmp_path)
     with open(os.path.join(stream_dir, "part-corrupt.txt"), "w") as f:
         f.write("{broken json\n\nnot json at all\n{\"payload\": null}\n")
     parsed = parse_cdc_events(spark.readStream.format("text").load(stream_dir))
@@ -222,10 +229,10 @@ def test_corrupt_records_mid_stream_do_not_kill_the_query(spark, sf_dir):
     assert res.count() == n_events  # good rows all parsed, bad rows dropped
 
 
-def test_latency_mv_merge_and_compact(spark, sf_dir):
-    stream_dir, _ = _make_stream(spark, sf_dir)
-    mv_dir = tempfile.mkdtemp(prefix="mv_") + "/t"
-    ckpt = tempfile.mkdtemp(prefix="mv_ck_")
+def test_latency_mv_merge_and_compact(spark, sf_dir, tmp_path):
+    stream_dir, _ = _make_stream(spark, sf_dir, tmp_path)
+    mv_dir = str(tmp_path / "mv")
+    ckpt = str(tmp_path / "mv_ck")
     parsed = parse_cdc_events(
         spark.readStream.format("text").option("maxFilesPerTrigger", "1").load(stream_dir)
     ).withColumn("ts", F.timestamp_millis("upbit_timestamp"))
@@ -249,32 +256,32 @@ def test_latency_mv_merge_and_compact(spark, sf_dir):
     assert before == after
 
 
-@pytest.mark.parametrize("fail_on", ["every_rename", "swap_in_rename"])
-def test_latency_mv_compaction_failure_keeps_partials(spark, monkeypatch, fail_on):
-    # a rename failing mid-compaction must leave the MV readable with
-    # its pre-compaction answer: first with every rename refused, then
-    # with only the staged-table swap refused (the restore path)
+@pytest.mark.parametrize("fail_on", ["every_rename", "folded_batch_delete"])
+def test_latency_mv_compaction_failure_keeps_partials(spark, tmp_path, monkeypatch, fail_on):
+    # a compaction failing before its base is published (every rename
+    # refused: the base-publish rename is the only one) or after it
+    # (the delete of the folded batches refused) must leave the MV
+    # readable with its pre-compaction answer
     import datetime
+    import shutil
 
     m0 = datetime.datetime(2024, 1, 1, 9, 0)
     m1 = m0 + datetime.timedelta(minutes=1)
-    mv_dir = tempfile.mkdtemp(prefix="mv_fail_") + "/t"
+    mv_dir = str(tmp_path / "mv")
     schema = "minute timestamp, sum_latency long, cnt long, min_latency long, max_latency long"
-    for rows in ([(m0, 10, 2, 4, 6)], [(m0, 3, 1, 3, 3), (m1, 5, 1, 5, 5)]):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(mv_dir)
+    for i, rows in enumerate(([(m0, 10, 2, 4, 6)], [(m0, 3, 1, 3, 3), (m1, 5, 1, 5, 5)])):
+        spark.createDataFrame(rows, schema).write.parquet(os.path.join(mv_dir, f"batch={i}"))
 
     def read():
         return {r["minute"]: r.asDict() for r in read_latency_mv(spark, mv_dir).collect()}
 
     before = read()
-    real_rename = os.rename
 
-    def failing_rename(src, dst, *args, **kwargs):
-        if fail_on == "every_rename" or str(src).endswith("__compact_tmp"):
-            raise OSError("injected rename failure")
-        return real_rename(src, dst, *args, **kwargs)
+    def refuse(*args, **kwargs):
+        raise OSError("injected failure")
 
-    monkeypatch.setattr(os, "rename", failing_rename)
+    target = (os, "rename") if fail_on == "every_rename" else (shutil, "rmtree")
+    monkeypatch.setattr(*target, refuse)
     with pytest.raises(OSError, match="injected"):
         compact_latency_mv(spark, mv_dir)
     monkeypatch.undo()
@@ -283,10 +290,105 @@ def test_latency_mv_compaction_failure_keeps_partials(spark, monkeypatch, fail_o
     # the next compaction succeeds and folds to one partial per minute
     compact_latency_mv(spark, mv_dir)
     assert read() == before
-    assert spark.read.parquet(mv_dir).count() == 2
+    assert read_batches(spark, mv_dir).count() == 2
 
 
-def test_fanout_ingest_time_mode(spark, sf_dir):
+def _parsed_stream(spark, stream_dir):
+    return parse_cdc_events(read_cdc_stream(spark, stream_dir)).withColumn(
+        "ts", F.timestamp_millis("upbit_timestamp")
+    )
+
+
+def _drop_last_commit(ckpt):
+    # a crash after the sink write and before the commit-log entry:
+    # the restarted query replays that batch
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+
+
+def _sink_totals(spark, out, mv_dir):
+    """(raw rows, Σ trade_count, MV Σn)."""
+    return (
+        spark.read.parquet(os.path.join(out, "crypto_trades")).count(),
+        read_merged_trade_agg(spark, out).agg(F.sum("trade_count")).first()[0],
+        read_latency_mv(spark, mv_dir).agg(F.sum("n")).first()[0],
+    )
+
+
+def test_replayed_batch_is_not_double_counted(spark, sf_dir, tmp_path):
+    # W9: a replayed batch replaces its own output in every
+    # foreachBatch sink instead of adding to it
+    stream_dir, n_events = _make_stream(spark, sf_dir, tmp_path)
+    out, ckpt, mv_dir = (str(tmp_path / d) for d in ("out", "ckpt", "mv"))
+
+    def run():
+        run_cdc_fanout(spark, stream_dir, out, ckpt)
+        start_latency_mv(spark, _parsed_stream(spark, stream_dir), mv_dir, os.path.join(ckpt, "mv"))
+
+    run()
+    for q in ("fanout", "mv"):
+        _drop_last_commit(os.path.join(ckpt, q))
+    run()
+    assert _sink_totals(spark, out, mv_dir) == (n_events,) * 3
+
+
+def test_partials_compact_while_queries_run(spark, sf_dir, tmp_path):
+    # both partials tables are compacted while the fan-out and the MV
+    # run on a 0-s trigger — racing the batch of each landed file —
+    # and again after a forced replay of a folded batch
+    import shutil
+
+    src, n_events = _make_stream(spark, sf_dir, tmp_path)
+    files = sorted(f for f in os.listdir(src) if f.startswith("part-"))
+    assert len(files) >= 2
+    topic, out, ckpt, mv_dir = (str(tmp_path / d) for d in ("topic", "out", "ckpt", "mv"))
+    os.makedirs(topic)
+    keys = ("window_start", "window_end", "market")
+
+    def start():
+        return [
+            run_cdc_fanout(spark, topic, out, ckpt, trigger_seconds=0, synchronous=False),
+            start_latency_mv(
+                spark, _parsed_stream(spark, topic), mv_dir, os.path.join(ckpt, "mv"),
+                synchronous=False,
+            ),
+        ]
+
+    def compact():
+        compact_batches(
+            spark, os.path.join(out, "trade_agg_partials"),
+            lambda p: merge_trade_partials(p, *keys),
+        )
+        compact_latency_mv(spark, mv_dir)
+
+    def land(f):
+        # renamed into the topic, so the source never lists a partial file
+        shutil.copy(os.path.join(src, f), tmp_path / f)
+        os.rename(tmp_path / f, os.path.join(topic, f))
+
+    def run(files):
+        queries = start()
+        try:
+            for f in files:
+                land(f)
+                compact()
+                for q in queries:
+                    q.processAllAvailable()
+        finally:
+            for q in queries:
+                q.stop()
+        compact()
+
+    run(files[:-1])
+    for q in ("fanout", "mv"):
+        _drop_last_commit(os.path.join(ckpt, q))
+    run(files[-1:])
+    assert _sink_totals(spark, out, mv_dir) == (n_events,) * 3
+
+
+def test_fanout_ingest_time_mode(spark, sf_dir, tmp_path):
     """W1 strict-parity mode: processing/ingestion-time windows (the
     reference ran processing time, no watermarks). Non-deterministic by
     nature, so assert the invariants instead of values: every event
@@ -294,9 +396,9 @@ def test_fanout_ingest_time_mode(spark, sf_dir):
     time inside the run's span."""
     import datetime
 
-    stream_dir, n_events = _make_stream(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="cdc_out_ing_")
-    ckpt = tempfile.mkdtemp(prefix="cdc_ck_ing_")
+    stream_dir, n_events = _make_stream(spark, sf_dir, tmp_path)
+    out = str(tmp_path / "cdc_out_ing")
+    ckpt = str(tmp_path / "cdc_ck_ing")
 
     t0 = datetime.datetime.now() - datetime.timedelta(minutes=5)
     run_cdc_fanout(spark, stream_dir, out, ckpt, time_mode="ingest")

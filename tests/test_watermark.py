@@ -18,7 +18,6 @@ import pytest
 
 import datetime
 import os
-import tempfile
 import time
 import uuid
 
@@ -31,13 +30,12 @@ def _mins(m: float) -> datetime.datetime:
     return T0 + datetime.timedelta(minutes=m)
 
 
-def _write_batches(spark, batches):
-    d = tempfile.mkdtemp(prefix="wm_")
+def _write_batches(spark, d, batches):
     for i, rows in enumerate(batches):
         df = spark.createDataFrame(rows, "ts timestamp, market string, v double")
         df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, f"b{i}"))
         time.sleep(1.1)  # distinct mtimes → deterministic batch order
-    return d
+    return str(d)
 
 
 def _run_windowed(spark, src_dir):
@@ -67,7 +65,7 @@ def _run_windowed(spark, src_dir):
 
 
 @pytest.mark.slow
-def test_late_row_after_window_finalized_is_dropped(spark):
+def test_late_row_after_window_finalized_is_dropped(spark, tmp_path):
     # Spark's watermark guarantee is one-directional: a window is
     # emitted exactly once when the watermark passes its end, and a
     # late row arriving *after* that finalization is dropped (a row
@@ -75,6 +73,7 @@ def test_late_row_after_window_finalized_is_dropped(spark):
     # "may or may not be dropped" per the docs, verified empirically).
     d = _write_batches(
         spark,
+        tmp_path,
         [
             # 12:02 opens window (0); 12:30 advances the event-time max
             [(_mins(2), "m", 1.0), (_mins(30), "m", 1.0)],
@@ -91,9 +90,10 @@ def test_late_row_after_window_finalized_is_dropped(spark):
 
 
 @pytest.mark.slow
-def test_on_time_rows_across_batches_merge_into_windows(spark):
+def test_on_time_rows_across_batches_merge_into_windows(spark, tmp_path):
     d = _write_batches(
         spark,
+        tmp_path,
         [
             [(_mins(0), "m", 1.0)],
             [(_mins(1), "m", 1.0), (_mins(6), "m", 1.0)],  # within watermark
