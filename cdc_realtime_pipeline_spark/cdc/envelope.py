@@ -29,22 +29,22 @@ from pyspark.sql import functions as F
 from cdc_realtime_pipeline_spark.schemas import ENVELOPE_SCHEMA
 
 
-def _num(col: Column, default: float = 0.0) -> Column:
+def _num(col: Column) -> Column:
     """Decimal-string (or bare number) → double with 0.0 fallback.
 
     ``try_cast`` (not ``cast``): ANSI mode would throw on garbage input,
     but the reference drops to a default instead
     (CdcEventParser.java:104-115).
     """
-    return F.coalesce(col.try_cast("double"), F.lit(default))
+    return F.coalesce(col.try_cast("double"), F.lit(0.0))
 
 
-def _unwrap_envelope(raw: DataFrame, value_col: str, *keep: str) -> DataFrame:
+def _unwrap_envelope(raw: DataFrame, *keep: str) -> DataFrame:
     """Envelope unwrap shared by both parsers: op / before / after /
     source_ts / cdc_ts from the payload wrapper, falling back to bare
     fields, plus ``data`` — the row image (``before`` for deletes,
     ``after`` otherwise). ``keep`` columns of ``raw`` ride along first."""
-    parsed = raw.withColumn("_env", F.from_json(F.col(value_col), ENVELOPE_SCHEMA))
+    parsed = raw.withColumn("_env", F.from_json(F.col("value"), ENVELOPE_SCHEMA))
     p = parsed.select(
         *keep,
         F.coalesce(F.col("_env.payload.op"), F.col("_env.op")).alias("op"),
@@ -59,13 +59,13 @@ def _unwrap_envelope(raw: DataFrame, value_col: str, *keep: str) -> DataFrame:
     return p.withColumn("data", data)
 
 
-def parse_cdc_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_cdc_events(raw: DataFrame) -> DataFrame:
     """JSON change-event strings → typed CryptoTradeEvent rows.
 
-    ``raw`` has one string column (default ``value``, the Kafka message
-    value). Works identically on batch and streaming DataFrames.
+    ``raw`` has a string column ``value`` (the Kafka message value).
+    Works identically on batch and streaming DataFrames.
     """
-    p = _unwrap_envelope(raw, value_col)
+    p = _unwrap_envelope(raw)
     # Tombstones parse to all-null envelopes; malformed JSON yields null struct.
     p = p.filter(F.col("op").isNotNull() & F.col("data").isNotNull())
     return p.select(
@@ -86,7 +86,7 @@ def parse_cdc_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
-def parse_cdc_events_with_audit(raw: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_cdc_events_with_audit(raw: DataFrame) -> DataFrame:
     """Parse + audit columns instead of silent drops.
 
     Same extraction as ``parse_cdc_events`` but every input row
@@ -96,9 +96,9 @@ def parse_cdc_events_with_audit(raw: DataFrame, value_col: str = "value") -> Dat
     row) for pipelines that must account for every message. Filter
     ``_reject_reason IS NULL`` to recover the strict parser's output.
     """
-    p = _unwrap_envelope(raw, value_col, value_col)
+    p = _unwrap_envelope(raw, "value")
     reason = (
-        F.when(F.col(value_col).isNull(), F.lit("tombstone"))
+        F.when(F.col("value").isNull(), F.lit("tombstone"))
         .when(F.col("op").isNull() & F.col("data").isNull(), F.lit("malformed_json"))
         .when(F.col("data").isNull(), F.lit("no_row_image"))
         .when(F.col("op").isNull(), F.lit("malformed_json"))

@@ -40,9 +40,11 @@ from pyspark.sql.window import Window
 from cdc_realtime_pipeline_spark.session import load_table
 
 # Per-key-group thresholds, the fixture analog of the per-market
-# BTC/ETH/default tiers (AnomalyDetector.java:182-196).
-_LARGE_T0, _LARGE_T1, _LARGE_DEFAULT = 450.0, 400.0, 350.0
-_SPIKE_T0, _SPIKE_DEFAULT = 2.0, 3.0
+# BTC/ETH/default tiers (AnomalyDetector.java:182-196): entry i applies
+# to keys with key % 3 == i, the last entry to every later residue and
+# to markets without a numeric key.
+_LARGE_TIERS = (450.0, 400.0, 350.0)
+_SPIKE_TIERS = (2.0, 3.0)
 _EMA_ALPHA = 0.05
 _SURGE_MULT = 2.0  # reference: 50× (AnomalyDetector.java:71)
 _SURGE_MIN_SAMPLES = 10  # reference: ≥50 samples (AnomalyDetector.java:137)
@@ -56,19 +58,23 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
-def _threshold_col() -> F.Column:
+def _tier(tiers: tuple[float, ...], key: int) -> float:
+    """The threshold of integer ``key`` under ``tiers``."""
+    return tiers[min(key % 3, len(tiers) - 1)]
+
+
+def _tier_col(tiers: tuple[float, ...]) -> F.Column:
     # market.contains("BTC")-style tiering (AnomalyDetector.java:182-186),
     # keyed on user_id % 3 for the fixture.
-    return (
-        F.when(F.col("user_id") % 3 == 0, F.lit(_LARGE_T0))
-        .when(F.col("user_id") % 3 == 1, F.lit(_LARGE_T1))
-        .otherwise(F.lit(_LARGE_DEFAULT))
-    )
+    col = F.when(F.col("user_id") % 3 == 0, F.lit(tiers[0]))
+    for i in range(1, len(tiers) - 1):
+        col = col.when(F.col("user_id") % 3 == i, F.lit(tiers[i]))
+    return col.otherwise(F.lit(tiers[-1]))
 
 
 def alerts_large_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3: amount ≥ θ(key) — stateless filter + formatted message."""
-    ev = _events(spark, sf_dir).withColumn("threshold", _threshold_col())
+    ev = _events(spark, sf_dir).withColumn("threshold", _tier_col(_LARGE_TIERS))
     return (
         ev.filter(F.col("value") >= F.col("threshold"))
         .select(
@@ -88,9 +94,9 @@ def alerts_large_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 ALERTS_LARGE_TRADE_SQL = f"""
 WITH ev AS (
   SELECT *,
-         CAST(CASE WHEN user_id % 3 = 0 THEN {_LARGE_T0}
-                   WHEN user_id % 3 = 1 THEN {_LARGE_T1}
-                   ELSE {_LARGE_DEFAULT} END AS DOUBLE) AS threshold
+         CAST(CASE WHEN user_id % 3 = 0 THEN {_LARGE_TIERS[0]}
+                   WHEN user_id % 3 = 1 THEN {_LARGE_TIERS[1]}
+                   ELSE {_LARGE_TIERS[2]} END AS DOUBLE) AS threshold
   FROM events
 )
 SELECT 'LARGE_TRADE' AS alert_type,
@@ -107,9 +113,7 @@ FROM ev WHERE value >= threshold
 def alerts_price_spike(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4: |price − lag(price)| / lag(price) ≥ θ(key), per key in ts order."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    theta = F.when(F.col("user_id") % 3 == 0, F.lit(_SPIKE_T0)).otherwise(
-        F.lit(_SPIKE_DEFAULT)
-    )
+    theta = _tier_col(_SPIKE_TIERS)
     ev = (
         _events(spark, sf_dir)
         .withColumn("prev_price", F.lag("value").over(w))
@@ -136,7 +140,7 @@ ALERTS_PRICE_SPIKE_SQL = f"""
 WITH ev AS (
   SELECT *,
          lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_price,
-         CAST(CASE WHEN user_id % 3 = 0 THEN {_SPIKE_T0} ELSE {_SPIKE_DEFAULT} END AS DOUBLE) AS threshold
+         CAST(CASE WHEN user_id % 3 = 0 THEN {_SPIKE_TIERS[0]} ELSE {_SPIKE_TIERS[1]} END AS DOUBLE) AS threshold
   FROM events
 )
 SELECT 'PRICE_SPIKE' AS alert_type,
@@ -151,13 +155,9 @@ WHERE prev_price IS NOT NULL AND prev_price > 0
 """
 
 
-def alerts_volume_surge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W5: volume ≥ mult × EMA(prev volumes), after ≥N samples per key.
-
-    EMA recurrence (AnomalyDetector.java:147-154): seeded with the first
-    value, e_k = (1−α)·e_{k−1} + α·v_k; the rule compares v_k against
-    the EMA of rows 1..k−1. Closed form used here so the whole rule
-    stays JVM-side and oracle-checkable:
+def _ema_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events with ``vol`` (= props.k) and ``ema_k``, the per-key EMA
+    over rows 1..k in (ts, event_id) order, in closed form:
 
         e_k = (1−α)^(k−1)·v_1 + α·Σ_{i=2..k} (1−α)^(k−i)·v_i
 
@@ -180,12 +180,25 @@ def alerts_volume_surge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cum_w", F.sum("w_i").over(wcum))
         .withColumn("first_vol", F.first("vol").over(wcum))
     )
-    # EMA over rows 1..k (then the rule uses the EMA *before* this row,
-    # i.e. EMA at k−1, matching "update state after check" ordering).
     ema_k = F.pow(F.lit(1 - a), F.col("rn") - 1) * F.col("first_vol") + F.lit(a) * (
-        F.pow(F.lit(1 - a), F.col("rn")) * (F.col("cum_w") - F.col("first_vol") * F.pow(F.lit(1 - a), F.lit(-1.0)))
+        F.pow(F.lit(1 - a), F.col("rn"))
+        * (F.col("cum_w") - F.col("first_vol") * F.pow(F.lit(1 - a), F.lit(-1.0)))
     )
-    ev = ev.withColumn("ema_k", ema_k).withColumn("ema_prev", F.lag("ema_k").over(w))
+    return ev.withColumn("ema_k", ema_k)
+
+
+def alerts_volume_surge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W5: volume ≥ mult × EMA(prev volumes), after ≥N samples per key.
+
+    EMA recurrence (AnomalyDetector.java:147-154): seeded with the first
+    value, e_k = (1−α)·e_{k−1} + α·v_k; the rule compares v_k against
+    the EMA of rows 1..k−1. The closed form (``_ema_by_key``) keeps the
+    whole rule JVM-side and oracle-checkable.
+    """
+    # the rule uses the EMA *before* this row, i.e. EMA at k−1,
+    # matching "update state after check" ordering
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ev = _ema_by_key(spark, sf_dir).withColumn("ema_prev", F.lag("ema_k").over(w))
     return (
         ev.filter(
             (F.col("rn") > _SURGE_MIN_SAMPLES)
@@ -244,29 +257,10 @@ def ema_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     (α=0.05, seeded with the first value — AnomalyDetector.java:133-154),
     final value and sample count per key.
 
-    Same closed-form-via-cumsum construction as the volume-surge rule;
-    the last row per key carries the final EMA.
+    ``_ema_by_key``'s closed form, as in the volume-surge rule; the
+    last row per key carries the final EMA.
     """
-    a = _EMA_ALPHA
-    ev = _events(spark, sf_dir).select(
-        "event_id",
-        "ts",
-        "user_id",
-        F.get_json_object("props", "$.k").cast("double").alias("vol"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-    ev = (
-        ev.withColumn("rn", F.row_number().over(w))
-        .withColumn("w_i", F.col("vol") * F.pow(F.lit(1 - a), -F.col("rn")))
-        .withColumn("cum_w", F.sum("w_i").over(wcum))
-        .withColumn("first_vol", F.first("vol").over(wcum))
-    )
-    ema_k = F.pow(F.lit(1 - a), F.col("rn") - 1) * F.col("first_vol") + F.lit(a) * (
-        F.pow(F.lit(1 - a), F.col("rn"))
-        * (F.col("cum_w") - F.col("first_vol") * F.pow(F.lit(1 - a), F.lit(-1.0)))
-    )
-    ev = ev.withColumn("ema_k", ema_k)
+    ev = _ema_by_key(spark, sf_dir)
     wmax = Window.partitionBy("user_id")
     return (
         ev.withColumn("max_rn", F.max("rn").over(wmax))
@@ -460,7 +454,7 @@ def alerts_large_trade_lookup_join(spark: SparkSession, sf_dir: str) -> DataFram
     reference (AnomalyDetector.java:182-196) become rows, not code.
     """
     thresholds = spark.createDataFrame(
-        [(0, _LARGE_T0), (1, _LARGE_T1), (2, _LARGE_DEFAULT)],
+        [(k, _tier(_LARGE_TIERS, k)) for k in range(3)],
         "tier int, threshold double",
     )
     ev = _events(spark, sf_dir).withColumn("tier", (F.col("user_id") % 3).cast("int"))
@@ -480,9 +474,9 @@ def alerts_large_trade_lookup_join(spark: SparkSession, sf_dir: str) -> DataFram
 
 ALERTS_LARGE_TRADE_LOOKUP_SQL = f"""
 WITH thresholds(tier, threshold) AS (
-  VALUES (0, CAST({_LARGE_T0} AS DOUBLE)),
-         (1, CAST({_LARGE_T1} AS DOUBLE)),
-         (2, CAST({_LARGE_DEFAULT} AS DOUBLE))
+  VALUES (0, CAST({_LARGE_TIERS[0]} AS DOUBLE)),
+         (1, CAST({_LARGE_TIERS[1]} AS DOUBLE)),
+         (2, CAST({_LARGE_TIERS[2]} AS DOUBLE))
 )
 SELECT 'LARGE_TRADE' AS alert_type,
        user_id AS market,

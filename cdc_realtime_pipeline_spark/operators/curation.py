@@ -26,6 +26,7 @@ from cdc_realtime_pipeline_spark.operators.dedup import (
     _hash64,
     _HASH64_SQL,
     doc_words,
+    _SHINGLE_N,
     normalize_text,
 )
 from cdc_realtime_pipeline_spark.session import load_table, tracked_persist
@@ -39,10 +40,10 @@ _BENCH_MOD = 97
 _CONTAM_MIN_SHARED = 2
 
 
-def _all_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """doc → word n-gram shingles, one row per OCCURRENCE (duplicates
-    kept — repetition scoring needs multiplicity; decontamination
-    dedups downstream). Same narrow transform/slice plan as
+def _all_shingles(docs: DataFrame) -> DataFrame:
+    """doc → word ``_SHINGLE_N``-gram shingles, one row per OCCURRENCE
+    (duplicates kept — repetition scoring needs multiplicity;
+    decontamination dedups downstream). Same narrow transform/slice plan as
     ``dedup._word_shingles`` minus the distinct."""
     # fast path: a caller passing the memoized tokenized corpus
     # (``doc_words``) skips the per-call normalize+split re-derivation
@@ -53,8 +54,10 @@ def _all_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
             "doc_id", F.split(normalize_text(F.col("text")), " ").alias("words")
         )
     )
-    idx = F.sequence(F.lit(0), F.greatest(F.size("words") - n, F.lit(0)))
-    shingle = F.transform(idx, lambda i: F.concat_ws(" ", F.slice("words", i + 1, n)))
+    idx = F.sequence(F.lit(0), F.greatest(F.size("words") - _SHINGLE_N, F.lit(0)))
+    shingle = F.transform(
+        idx, lambda i: F.concat_ws(" ", F.slice("words", i + 1, _SHINGLE_N))
+    )
     return (
         wdf.withColumn("shingle", F.explode(shingle))
         .filter(F.length("shingle") > 0)

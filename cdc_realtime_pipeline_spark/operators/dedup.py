@@ -211,8 +211,12 @@ FROM hashed GROUP BY content_hash ORDER BY doc_id
 """
 
 
-def _word_shingles(df: DataFrame, n: int = 3) -> DataFrame:
-    """doc → exploded word n-gram shingles (distinct per doc).
+# words per shingle (the oracle's ``words[i : i + 2]`` slices)
+_SHINGLE_N = 3
+
+
+def _word_shingles(df: DataFrame) -> DataFrame:
+    """doc → exploded word ``_SHINGLE_N``-gram shingles (distinct per doc).
 
     Built with array transform/slice — a narrow (shuffle-free) plan.
     Measured alternative: posexplode + window ``lead`` adds a per-doc
@@ -227,9 +231,9 @@ def _word_shingles(df: DataFrame, n: int = 3) -> DataFrame:
     wdf = df.select(
         "doc_id", F.split(normalize_text(F.col("text")), " ").alias("words")
     )
-    idx = F.sequence(F.lit(0), F.greatest(F.size("words") - n, F.lit(0)))
+    idx = F.sequence(F.lit(0), F.greatest(F.size("words") - _SHINGLE_N, F.lit(0)))
     shingle = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice("words", i + 1, n))
+        idx, lambda i: F.concat_ws(" ", F.slice("words", i + 1, _SHINGLE_N))
     )
     return (
         wdf.withColumn("shingle", F.explode(F.array_distinct(shingle)))
@@ -284,7 +288,7 @@ MIN_RARE_SHARED = 2
 # historical (R=2, B=16), so fixture plans and values are unchanged.
 _MH_MISS_TARGET = 1e-3  # max miss probability at the decision threshold
 # expected false collisions per doc PER BAND stay under this as the
-# corpus grows: n_docs · j_background^R ≤ _MH_TARGET_BUCKET pins R
+# corpus grows: n_docs · _MH_BACKGROUND_J^R ≤ _MH_TARGET_BUCKET pins R
 # (the per-doc total across all bands is B× this — the per-band bound
 # is what keeps each band's bucket join near-linear, mirroring the
 # cosine side's per-band bucket target)
@@ -301,9 +305,6 @@ _MH_MAX_BANDS = 512
 def minhash_band_geometry(
     n_docs: int,
     j_tau: float = 0.6,
-    miss_target: float = _MH_MISS_TARGET,
-    target_bucket: int = _MH_TARGET_BUCKET,
-    j_background: float = _MH_BACKGROUND_J,
     rows_per_band: int | None = None,
 ) -> tuple[int, int]:
     """Derive the (rows_per_band, n_bands) MinHash-backstop geometry
@@ -314,14 +315,14 @@ def minhash_band_geometry(
     Rows-per-band R grows with corpus count so expected FALSE
     collisions per doc PER BAND stay bounded: an unrelated pair
     (background Jaccard j₀) agrees on a band of R min-hashes w.p.
-    ≈ j₀^R, so n·j₀^R ≤ target_bucket pins
-    R = ⌈ln(n/target_bucket)/ln(1/j₀)⌉ (each band's bucket join stays
+    ≈ j₀^R, so n·j₀^R ≤ _MH_TARGET_BUCKET pins
+    R = ⌈ln(n/_MH_TARGET_BUCKET)/ln(1/j₀)⌉ (each band's bucket join stays
     near-linear in n; the per-doc TOTAL across bands is B× the
     per-band bound). Bands then restore
     recall at the decision threshold: a pair with Jaccard τ matches a
     band w.p. τ^R and is missed only if all B bands miss, so
-    miss(τ) = (1 − τ^R)^B ≤ miss_target pins
-    B = ⌈ln(miss_target)/ln(1 − τ^R)⌉.
+    miss(τ) = (1 − τ^R)^B ≤ _MH_MISS_TARGET pins
+    B = ⌈ln(_MH_MISS_TARGET)/ln(1 − τ^R)⌉.
 
     At every test SF (n ≤ ~70k docs) this derives the historical
     (2, 16) geometry — miss(0.6) = 0.64¹⁶ ≈ 7.9e-4, and ≈ 8e-8 at
@@ -343,14 +344,14 @@ def minhash_band_geometry(
     """
     if rows_per_band is None:
         r = 2
-        if n_docs > target_bucket:
+        if n_docs > _MH_TARGET_BUCKET:
             r = min(
                 8,
                 max(
                     2,
                     math.ceil(
-                        math.log(n_docs / target_bucket)
-                        / math.log(1.0 / j_background)
+                        math.log(n_docs / _MH_TARGET_BUCKET)
+                        / math.log(1.0 / _MH_BACKGROUND_J)
                     ),
                 ),
             )
@@ -363,7 +364,7 @@ def minhash_band_geometry(
         r = rows_per_band
     # shared clamp-and-cap derivation (similarity.derive_bands): J-τ
     # endpoints degrade to the _MH_MAX_BANDS cap instead of crashing
-    return r, derive_bands(j_tau**r, miss_target, _MH_MAX_BANDS)
+    return r, derive_bands(j_tau**r, _MH_MISS_TARGET, _MH_MAX_BANDS)
 
 
 # corpus doc count per sf_dir for the derived backstop geometry — the
@@ -385,15 +386,11 @@ def _docs_count(spark: SparkSession, sf_dir: str) -> int:
 
 def _shingle_candidates(
     sh: DataFrame,
-    max_df: int | None = None,
-    min_rare_shared: int | None = None,
-    b_side_min_id: int | None = None,
     provenance: bool = False,
     rows_per_band: int | None = None,
     bands: int | None = None,
     n_docs: int = 0,
     sets: DataFrame | None = None,
-    band_stack: DataFrame | None = None,
 ) -> DataFrame:
     """Candidates-then-exact-verify pair generator.
 
@@ -403,8 +400,8 @@ def _shingle_candidates(
     plus both set sizes), so candidate generation only affects recall
     and cost, never precision:
 
-    1. df-capped shingle join: pairs sharing ≥ ``min_rare_shared``
-       shingles of document frequency ≤ ``max_df`` — cost Σ_{df≤cap} df²,
+    1. df-capped shingle join: pairs sharing ≥ ``MIN_RARE_SHARED``
+       shingles of document frequency ≤ ``MAX_SHINGLE_DF`` — cost Σ_{df≤cap} df²,
        bounded per key, never corpus².
     2. MinHash band collisions: pairs agreeing on any of B bands of R
        salted min-hashes derived from the cached verify-set arrays.
@@ -435,16 +432,10 @@ def _shingle_candidates(
     would OOM at 100 TB; the joins are equi-joins on doc_id and AQE
     picks broadcast at runtime when the actual size allows it.
     """
-    # resolved at call time (not def time) so tests can force-degrade
-    # the caps by monkeypatching the module constants
-    if max_df is None:
-        max_df = MAX_SHINGLE_DF
-    if min_rare_shared is None:
-        min_rare_shared = MIN_RARE_SHARED
     sh = sh.select("doc_id", F.xxhash64("shingle").alias("shingle"))
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     rare = sh.join(
-        dfreq.filter(F.col("df") <= max_df).select("shingle"), "shingle"
+        dfreq.filter(F.col("df") <= MAX_SHINGLE_DF).select("shingle"), "shingle"
     )
     # reused 3× (band sigs, both verify sides) — one computation,
     # cached; released by the caller loop via release_caches. Callers
@@ -457,17 +448,11 @@ def _shingle_candidates(
     pred = (F.col("a.shingle") == F.col("b.shingle")) & (
         F.col("a.doc_id") < F.col("b.doc_id")
     )
-    if b_side_min_id is not None:
-        # incremental mode: every pair's higher id must be a new-batch
-        # doc, so index×index pairs are pruned inside BOTH generators'
-        # join predicates — work is O(increment × bucket), never
-        # O(corpus²) (ids are monotone: new batch = highest ids)
-        pred = pred & (F.col("b.doc_id") >= b_side_min_id)
     rare_pairs = (
         a.join(b, pred)
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("_rare_shared"))
-        .filter(F.col("_rare_shared") >= min_rare_shared)
+        .filter(F.col("_rare_shared") >= MIN_RARE_SHARED)
         .select("doc_a", "doc_b")
     )
     # MinHash signatures derived from the already-cached per-doc
@@ -502,8 +487,6 @@ def _shingle_candidates(
     band_pred = (F.col("a.band_key") == F.col("b.band_key")) & (
         F.col("a.doc_id") < F.col("b.doc_id")
     )
-    if b_side_min_id is not None:
-        band_pred = band_pred & (F.col("b.doc_id") >= b_side_min_id)
     band_pairs = (
         ba.join(bb, band_pred)
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
@@ -688,17 +671,12 @@ def dedup_docs_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     and its best match score. The keep-min survivor rule means a new
     doc matching anything is the one to drop.
 
-    Round 13 (guide §2.4 "remove shuffles outright"): the increment
-    restriction is now a FILTER on the shared memoized candidate
-    stage instead of a third private candidates-then-verify build —
-    provably the same pair set (a pair generated with the in-join
-    ``doc_b ≥ min_id`` pruning is exactly an unrestricted pair with
-    ``doc_b ≥ min_id``, in both generators), and when the plan is
-    built cold Catalyst pushes the doc_b predicate back down through
-    the verify joins and both generators' aggregates into the join
-    predicates — the same O(increment × bucket) pruning as before,
-    now sharing every stage with jaccard/levenshtein instead of
-    re-shingling, re-hashing and re-verifying privately.
+    The increment restriction is a FILTER on the shared memoized
+    candidate stage (guide §2.4 "remove shuffles outright"): when the
+    plan is built cold, Catalyst pushes the doc_b predicate down
+    through the verify joins and both generators' aggregates into the
+    join predicates, so the pruning is O(increment × bucket) while
+    every stage is shared with jaccard/levenshtein.
     """
     tau = 0.6
     verified = (
@@ -1053,15 +1031,13 @@ def _hash64(col: Column, salt: int) -> Column:
     ).cast("long")
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = 16, shingle_n: int = 3
-) -> DataFrame:
-    """Per-doc MinHash signature: min over shingles of H salted hashes.
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """Per-doc MinHash signature: min over shingles of 16 salted hashes.
 
     One explode + one groupBy — signature computation is a single
     shuffle regardless of corpus size.
     """
-    return _sigs_from_shingles(_word_shingles(docs, shingle_n), num_hashes)
+    return _sigs_from_shingles(_word_shingles(docs), 16)
 
 
 def _sigs_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:

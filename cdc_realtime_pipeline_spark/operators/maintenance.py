@@ -10,7 +10,7 @@ layout (SURVEY.md §2.1 S7, §4 "TTL-based retention"):
   than the retention horizon. Partition-granular: a directory unlink
   per month, no data rewrite, exactly like dropping a MergeTree part.
 * ``compact_partition`` — rewrite one partition's many small files
-  (streaming micro-batches leave one file per trigger) into few
+  (streaming micro-batches leave one file per trigger) into one
   — the OPTIMIZE analog.
 
 Both operate on a ``month=yyyyMM`` layout: a month-first table, or one
@@ -91,15 +91,15 @@ def swap_in(staged: str, live: str) -> None:
     shutil.rmtree(old)
 
 
-def compact_partition(spark: SparkSession, table_dir: str, month: str, target_files: int = 1) -> int:
-    """Rewrite one month partition into ``target_files`` files, written
+def compact_partition(spark: SparkSession, table_dir: str, month: str) -> int:
+    """Rewrite one month partition into one file, written
     aside and published with ``swap_in``. Returns the number of files
     before compaction.
     """
     part_dir = os.path.join(table_dir, f"month={month}")
     n_before = sum(1 for f in os.listdir(part_dir) if f.endswith(".parquet"))
     tmp = _hidden(part_dir, "compact")
-    spark.read.parquet(part_dir).coalesce(target_files).write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(part_dir).coalesce(1).write.mode("overwrite").parquet(tmp)
     swap_in(tmp, part_dir)
     return n_before
 

@@ -113,16 +113,20 @@ RESIZED_SCHEMA = (
 )
 
 
-def resize_and_patch(media: DataFrame, target: int = 224, patch: int = 16) -> DataFrame:
-    """Image-pipeline plumbing: resize-to-target + patch-count (the ViT
-    preprocessing shape), as an Arrow-batched transform.
+_RESIZE_PX = 224  # short side after resize
+_PATCH_PX = 16  # ViT patch edge
+
+
+def resize_and_patch(media: DataFrame) -> DataFrame:
+    """Image-pipeline plumbing: resize-to-``_RESIZE_PX`` + patch-count
+    (the ViT preprocessing shape), as an Arrow-batched transform.
 
     The pixel work is stubbed (no image libs in this container — a real
     deployment drops PIL into ``_resize_stub``); the aspect-ratio and
     patch-grid math, batch iteration, and schema contract are real.
     """
 
-    def _resize_stub(w: int, h: int, target_px: int) -> tuple[int, int]:
+    def _resize_stub(w: int, h: int) -> tuple[int, int]:
         # preserve aspect ratio, short side → target (PIL.Image.resize
         # would produce exactly these dims; bytes are not materialized).
         # floor(x+0.5), not round(): Python round() is banker's rounding
@@ -131,12 +135,12 @@ def resize_and_patch(media: DataFrame, target: int = 224, patch: int = 16) -> Da
             return int(x + 0.5)
 
         if w <= h:
-            return target_px, max(1, r(h * target_px / w))
-        return max(1, r(w * target_px / h)), target_px
+            return _RESIZE_PX, max(1, r(h * _RESIZE_PX / w))
+        return max(1, r(w * _RESIZE_PX / h)), _RESIZE_PX
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            dims = [_resize_stub(w, h, target) for w, h in zip(pdf["width"], pdf["height"])]
+            dims = [_resize_stub(w, h) for w, h in zip(pdf["width"], pdf["height"])]
             ow = [d[0] for d in dims]
             oh = [d[1] for d in dims]
             yield pd.DataFrame(
@@ -145,7 +149,9 @@ def resize_and_patch(media: DataFrame, target: int = 224, patch: int = 16) -> Da
                     "media_type": pdf["media_type"],
                     "out_width": ow,
                     "out_height": oh,
-                    "n_patches": [(a // patch) * (b // patch) for a, b in dims],
+                    "n_patches": [
+                        (a // _PATCH_PX) * (b // _PATCH_PX) for a, b in dims
+                    ],
                 }
             )
 

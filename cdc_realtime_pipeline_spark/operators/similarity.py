@@ -492,8 +492,6 @@ def _corpus_count(spark: SparkSession, sf_dir: str) -> int:
 def lsh_band_geometry(
     n_vectors: int,
     tau: float = 0.95,
-    miss_target: float = _LSH_MISS_TARGET,
-    target_bucket: int = _LSH_TARGET_BUCKET,
     bits: int | None = None,
 ) -> tuple[int, int]:
     """Derive the (bits_per_band, n_bands) LSH geometry from corpus
@@ -501,11 +499,12 @@ def lsh_band_geometry(
     formula instead of a comment (VERDICT r11 #5).
 
     Bits widen with corpus count so unrelated-pair band buckets stay
-    at ~``target_bucket`` expected members (collision rate 2^-bits →
+    at ~``_LSH_TARGET_BUCKET`` expected members (collision rate 2^-bits →
     bucket ≈ n/2^bits; join cost Σ bucket² stays near-linear in n).
     Bands then restore recall: a sign bit disagrees w.p.
     p = acos(τ)/π, a band of R bits matches w.p. q=(1−p)^R, and
-    miss(τ) = (1−q)^B ≤ miss_target pins B = ⌈ln(miss_target)/ln(1−q)⌉.
+    miss(τ) = (1−q)^B ≤ _LSH_MISS_TARGET pins
+    B = ⌈ln(_LSH_MISS_TARGET)/ln(1−q)⌉.
 
     At every test SF (n ≤ 65k) this derives the historical (8, 16)
     geometry — miss(0.95) ≈ 1.4e-4 — so fixture results are unchanged;
@@ -525,14 +524,14 @@ def lsh_band_geometry(
 
     The derived band count is capped at ``_LSH_MAX_BANDS``: past the
     cap (τ far below the regime the signatures can separate) the
-    geometry degrades — miss(τ) exceeds ``miss_target`` — instead of
+    geometry degrades — miss(τ) exceeds ``_LSH_MISS_TARGET`` — instead of
     allocating an astronomically large plane matrix (ADVICE r12).
     """
     p = math.acos(min(max(tau, -1.0), 1.0)) / math.pi
     if bits is None:
         bits = 8
-        if n_vectors > target_bucket:
-            bits = min(32, max(8, math.ceil(math.log2(n_vectors / target_bucket))))
+        if n_vectors > _LSH_TARGET_BUCKET:
+            bits = min(32, max(8, math.ceil(math.log2(n_vectors / _LSH_TARGET_BUCKET))))
     elif bits < 1:
         raise ValueError(
             f"bits override must be >= 1, got {bits}: zero-width band "
@@ -540,7 +539,7 @@ def lsh_band_geometry(
         )
     # derive_bands clamps q away from {0, 1} (τ endpoints degrade to
     # the _LSH_MAX_BANDS cap instead of crashing) and applies the cap
-    return bits, derive_bands((1.0 - p) ** bits, miss_target, _LSH_MAX_BANDS)
+    return bits, derive_bands((1.0 - p) ** bits, _LSH_MISS_TARGET, _LSH_MAX_BANDS)
 
 
 def dedup_embeddings_cosine(

@@ -57,42 +57,36 @@ def _r4(c):
 _TICK_ID_SPAN = 1_000_000_000_000
 
 
-def _tick_sort_key(ts_col: str = "ts", id_col: str = "event_id"):
+def _tick_sort_key():
     """Deterministic total order for first/last-in-bucket (see above)."""
     return (
-        F.unix_micros(F.col(ts_col)).cast("decimal(24,0)")
+        F.unix_micros(F.col("ts")).cast("decimal(24,0)")
         * F.lit(_TICK_ID_SPAN).cast("decimal(13,0)")
-        + F.col(id_col).cast("decimal(38,0)")
+        + F.col("event_id").cast("decimal(38,0)")
     )
 
 
-def ohlc_bars(
-    df: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "market",
-    price_col: str = "price",
-    id_col: str = "event_id",
-    bar: str = "5 minutes",
-) -> DataFrame:
-    """Candlestick bars per key: open/high/low/close + tick count.
+def ohlc_bars(df: DataFrame) -> DataFrame:
+    """5-minute candlestick bars per ``market`` over (``ts``,
+    ``event_id``, ``price``) ticks: open/high/low/close + tick count.
 
     Single ``groupBy(window, key)`` — ``min_by``/``max_by`` carry the
     open/close through partial aggregation, so the plan is one shuffle
     with map-side combine regardless of ticks-per-bar skew (no
     row_number sort-within-group pass).
     """
-    k = _tick_sort_key(ts_col, id_col)
+    k = _tick_sort_key()
     return (
-        df.groupBy(F.window(F.col(ts_col), bar).alias("w"), F.col(key_col))
+        df.groupBy(F.window(F.col("ts"), "5 minutes").alias("w"), F.col("market"))
         .agg(
-            F.min_by(F.col(price_col), k).alias("open"),
-            F.max(price_col).alias("high"),
-            F.min(price_col).alias("low"),
-            F.max_by(F.col(price_col), k).alias("close"),
+            F.min_by(F.col("price"), k).alias("open"),
+            F.max("price").alias("high"),
+            F.min("price").alias("low"),
+            F.max_by(F.col("price"), k).alias("close"),
             F.count("*").alias("n_ticks"),
         )
         .select(
-            F.col(key_col),
+            F.col("market"),
             F.col("w.start").alias("bar_start"),
             "open",
             "high",
@@ -144,15 +138,9 @@ GROUP BY market, bar_start
 """
 
 
-def twap(
-    df: DataFrame,
-    bar_seconds: int = 3600,
-    ts_col: str = "ts",
-    key_col: str = "market",
-    price_col: str = "price",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Time-weighted average price per key per bar.
+def twap(df: DataFrame) -> DataFrame:
+    """Time-weighted average price per ``market`` per hour bar over
+    (``ts``, ``event_id``, ``price``) ticks.
 
     Irregular ticks: each price holds from its own timestamp until the
     next tick (or the end of the bar, whichever is first), so sparse
@@ -168,32 +156,32 @@ def twap(
     (integer-exact), Σpw is seconds-scaled so double noise sits ~9
     orders below the 4-dp rounding step.
     """
-    w = Window.partitionBy(key_col).orderBy(ts_col, id_col)
-    epoch_sec = (F.unix_micros(F.col(ts_col)) / 1_000_000).cast("long")
-    bar_start = F.timestamp_seconds(epoch_sec - (epoch_sec % bar_seconds))
+    w = Window.partitionBy("market").orderBy("ts", "event_id")
+    epoch_sec = (F.unix_micros(F.col("ts")) / 1_000_000).cast("long")
+    bar_start = F.timestamp_seconds(epoch_sec - (epoch_sec % 3600))
     ticks = df.select(
-        F.col(key_col),
-        F.col(ts_col),
-        F.col(price_col).alias("price"),
+        F.col("market"),
+        F.col("ts"),
+        F.col("price").alias("price"),
         bar_start.alias("bar_start"),
-        F.lead(ts_col).over(w).alias("next_ts"),
+        F.lead("ts").over(w).alias("next_ts"),
     )
-    bar_end = F.col("bar_start") + F.expr(f"INTERVAL {bar_seconds} SECONDS")
+    bar_end = F.col("bar_start") + F.expr("INTERVAL 3600 SECONDS")
     held_us = (
         F.unix_micros(F.least(F.coalesce(F.col("next_ts"), bar_end), bar_end))
-        - F.unix_micros(F.col(ts_col))
+        - F.unix_micros(F.col("ts"))
     )
     # a tick whose successor precedes it only via tie gets weight 0;
     # negatives are impossible (lead is ordered) but clamp anyway
     held_us = F.greatest(held_us, F.lit(0))
     weighted = ticks.select(
-        key_col,
+        "market",
         "bar_start",
         "price",
         held_us.alias("w_us"),
         (F.col("price") * held_us / 1_000_000.0).alias("pw_sec"),
     )
-    agg = weighted.groupBy(key_col, "bar_start").agg(
+    agg = weighted.groupBy("market", "bar_start").agg(
         F.sum("w_us").alias("w_us"),
         F.sum("pw_sec").alias("pw_sec"),
         F.avg("price").alias("avg_price"),
@@ -209,7 +197,7 @@ def twap(
     rpw = _r4(F.col("pw_sec"))
     w_sec = F.col("w_us") / 1_000_000.0
     return agg.select(
-        key_col,
+        "market",
         "bar_start",
         _r4(w_sec).alias("held_sec"),
         _r4(
@@ -269,15 +257,9 @@ FROM agg
 """
 
 
-def resample_locf(
-    df: DataFrame,
-    bucket_seconds: int = 900,
-    ts_col: str = "ts",
-    key_col: str = "market",
-    price_col: str = "price",
-    persist_buckets: bool = True,
-) -> DataFrame:
-    """Regular-grid resample per key with LOCF gap-fill.
+def resample_locf(df: DataFrame, persist_buckets: bool = True) -> DataFrame:
+    """15-minute regular-grid resample per ``market`` of (``ts``,
+    ``price``) ticks with LOCF gap-fill.
 
     Every key gets a dense bucket grid spanning its own [first, last]
     tick; buckets with no ticks inherit the previous bucket's avg
@@ -289,13 +271,11 @@ def resample_locf(
     preceding frame — one partition-parallel pass, the same idiom the
     as-of join uses (temporal.py:27).
     """
-    epoch_sec = (F.unix_micros(F.col(ts_col)) / 1_000_000).cast("long")
+    epoch_sec = (F.unix_micros(F.col("ts")) / 1_000_000).cast("long")
     ticks = df.select(
-        F.col(key_col),
-        F.col(price_col).alias("price"),
-        F.timestamp_seconds(epoch_sec - (epoch_sec % bucket_seconds)).alias(
-            "bucket"
-        ),
+        F.col("market"),
+        F.col("price").alias("price"),
+        F.timestamp_seconds(epoch_sec - (epoch_sec % 900)).alias("bucket"),
     )
     # persist the bucket-level aggregate (round 13, guide §5): it is
     # consumed TWICE — the grid bounds aggregate and the grid⋈obs join
@@ -310,7 +290,7 @@ def resample_locf(
     # so the persist's materialization barrier LOST ~0.7 s at sf0.1
     # (VERDICT r13 #3 regression, re-measured this round); past the
     # gate the scan is the corpus and halving it is the win.
-    per_bucket = ticks.groupBy(key_col, "bucket").agg(
+    per_bucket = ticks.groupBy("market", "bucket").agg(
         _r4(F.avg("price")).alias("price_obs")
     )
     if persist_buckets:
@@ -318,25 +298,28 @@ def resample_locf(
 
         per_bucket = tracked_persist(per_bucket)
     grid = (
-        per_bucket.groupBy(key_col)
+        per_bucket.groupBy("market")
         .agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
         .select(
-            key_col,
+            "market",
             F.explode(
-                F.sequence("lo", "hi", F.expr(f"INTERVAL {bucket_seconds} SECONDS"))
+                F.sequence("lo", "hi", F.expr("INTERVAL 900 SECONDS"))
             ).alias("bucket"),
         )
     )
-    joined = grid.join(per_bucket, [key_col, "bucket"], "left")
-    locf = Window.partitionBy(key_col).orderBy("bucket").rowsBetween(
+    joined = grid.join(per_bucket, ["market", "bucket"], "left")
+    locf = Window.partitionBy("market").orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, 0
     )
     return joined.select(
-        key_col,
+        "market",
         "bucket",
         F.last("price_obs", ignorenulls=True).over(locf).alias("price"),
         F.col("price_obs").isNull().cast("int").alias("is_gap"),
     )
+
+
+_LOCF_PERSIST_ROWS = 1_000_000
 
 
 def gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -344,22 +327,19 @@ def gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id, price ≙ value).
 
     The twice-consumed bucket aggregate is persisted only past a
-    volume gate (``SPARK_GRAFT_LOCF_PERSIST_ROWS``, default 1M rows,
-    parquet-footer count — the hampel #19 discipline): below it the
-    two scans run stage-parallel on idle cores and the persist's
-    barrier costs more than the rescan (measured +0.7 s at sf0.1,
-    VERDICT r13 #3); above it the duplicate corpus scan is the cost
-    that matters and the persist halves it."""
-    persist_rows = int(
-        os.environ.get("SPARK_GRAFT_LOCF_PERSIST_ROWS", str(1_000_000))
-    )
+    volume gate (``_LOCF_PERSIST_ROWS`` events, parquet-footer count —
+    the hampel #19 discipline): below it the two scans run
+    stage-parallel on idle cores and the persist's barrier costs more
+    than the rescan (measured +0.7 s at sf0.1, VERDICT r13 #3); above
+    it the duplicate corpus scan is the cost that matters and the
+    persist halves it."""
     ev = load_table(spark, sf_dir, "events").select(
         "ts",
         F.col("user_id").alias("market"),
         F.col("value").alias("price"),
     )
     return resample_locf(
-        ev, persist_buckets=_parquet_rows(sf_dir, "events") >= persist_rows
+        ev, persist_buckets=_parquet_rows(sf_dir, "events") >= _LOCF_PERSIST_ROWS
     )
 
 
@@ -933,6 +913,7 @@ FROM spec ORDER BY event_type, period_hours
 
 _HAMPEL_HALF = 10  # window = 2·half + 1 ticks
 _HAMPEL_K = 3.0  # flag threshold in scaled-MAD units
+_HAMPEL_SLICE_ROWS = 1_000_000  # events past which the window runs sliced
 _HAMPEL_C = 1.4826  # MAD → sigma consistency constant
 
 
@@ -973,17 +954,13 @@ def value_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames but never score, and chunk size derives from the key's tick
     count and the session parallelism — the same answer at any scale,
     pinned by the forced-slice differential pytest. Below the
-    threshold (``SPARK_GRAFT_HAMPEL_SLICE_ROWS``, default 1M rows —
-    fixture volumes, where the two extra sequence-assembly passes cost
+    threshold (``_HAMPEL_SLICE_ROWS`` events — fixture volumes, where the two extra sequence-assembly passes cost
     more than 5-way parallelism loses; measured +0.5 s at sf0.1) the
     direct per-key window runs instead.
     """
     ev = load_table(spark, sf_dir, "events")
     H = _HAMPEL_HALF
-    slice_rows = int(
-        os.environ.get("SPARK_GRAFT_HAMPEL_SLICE_ROWS", str(1_000_000))
-    )
-    if _parquet_rows(sf_dir, "events") < slice_rows:
+    if _parquet_rows(sf_dir, "events") < _HAMPEL_SLICE_ROWS:
         w = (
             Window.partitionBy("event_type")
             .orderBy("ts", "event_id")

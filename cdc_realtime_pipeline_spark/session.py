@@ -15,46 +15,59 @@ import threading
 from pyspark.sql import SparkSession
 
 
+# Runtime-settable settings every session the engine touches needs:
+# ``get_spark`` builds them in and ``ensure_engine_conf`` re-applies
+# them to a session built elsewhere (the driver's).
+_ENGINE_CONF = (
+    # driver fixtures store ns-precision timestamps; read as long and
+    # convert in load_table (Spark timestamps are µs)
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    # fixtures are tz-naive; read as session-tz TIMESTAMP (UTC below)
+    # so time functions (unix_millis, window) apply and DuckDB's
+    # naive-timestamp oracle semantics match
+    ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.adaptive.enabled", "true"),
+    # let AQE coalesce shuffles UNDER persisted plans too — the
+    # iterative operators (CC label propagation, BPE loop, k-means)
+    # persist a small relation every round, and with this off each
+    # round's joins are pinned at the full shuffle-partition count
+    # regardless of size (pure task overhead at fixture scale)
+    ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"),
+    # the Python DataSource connector implements pushFilters
+    # (SPARK-4.1 gates it behind this flag and ASSERTS if the
+    # reader defines the method while the flag is off)
+    ("spark.sql.python.filterPushdown.enabled", "true"),
+)
+
+
+def default_cpus() -> int:
+    """Core count from ``SPARK_GRAFT_CPUS``; unset, empty or ``0``
+    means every core of the host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or os.cpu_count() or 4
+
+
 def get_spark(
     app_name: str = "cdc_realtime_pipeline_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for core count. Pins session timezone
-    to UTC so results are comparable with the DuckDB oracle (DuckDB
-    timestamps are UTC-naive).
+    ``cpus`` defaults to ``default_cpus()``; shuffle partitions match
+    it. Pins session timezone to UTC so results are comparable with
+    the DuckDB oracle (DuckDB timestamps are UTC-naive).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
+        cpus = default_cpus()
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let AQE coalesce shuffles UNDER persisted plans too — the
-        # iterative operators (CC label propagation, BPE loop, k-means)
-        # persist a small relation every round, and with this off each
-        # round's joins are pinned at the full shuffle-partition count
-        # regardless of size (pure task overhead at fixture scale)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # driver fixtures store ns-precision timestamps; read as long and
-        # convert in load_table (Spark timestamps are µs)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # fixtures are tz-naive; read as session-tz TIMESTAMP (UTC below)
-        # so time functions (unix_millis, window) apply and DuckDB's
-        # naive-timestamp oracle semantics match
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
@@ -63,6 +76,8 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
     )
+    for k, v in _ENGINE_CONF:
+        builder = builder.config(k, v)
     # Memory: only meaningful in local mode when the JVM hasn't started yet.
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
     builder = builder.config("spark.driver.memory", driver_mem)
@@ -82,17 +97,7 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     TIMESTAMP(NANOS), which Spark 4 otherwise refuses), UTC session
     timezone (oracle comparability), and AQE.
     """
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"),
-        # the Python DataSource connector implements pushFilters
-        # (SPARK-4.1 gates it behind this flag and ASSERTS if the
-        # reader defines the method while the flag is off)
-        ("spark.sql.python.filterPushdown.enabled", "true"),
-    ):
+    for k, v in _ENGINE_CONF:
         if spark.conf.get(k, None) != v:
             spark.conf.set(k, v)
     # Stateful streaming can't use AQE partition coalescing, so the

@@ -15,12 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_cdc_json_files(df_json: DataFrame, out_dir: str, n_files: int = 4) -> str:
-    """Materialize a one-column ``value`` DataFrame as JSON-line text
-    files — the replayable CDC "topic". ``n_files`` ≙ partitions ≙
-    Kafka partition count (per-file order is preserved by the text
-    source, matching per-partition Kafka ordering)."""
-    df_json.repartition(n_files).write.mode("overwrite").text(out_dir)
+def write_cdc_topic(df_json: DataFrame, out_dir: str) -> str:
+    """Materialize a one-column ``value`` DataFrame as four JSON-line
+    text files — the replayable CDC "topic". Files ≙ partitions ≙ Kafka
+    partitions (per-file order is preserved by the text source,
+    matching per-partition Kafka ordering)."""
+    df_json.repartition(4).write.mode("overwrite").text(out_dir)
     return out_dir
 
 

@@ -51,10 +51,12 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from cdc_realtime_pipeline_spark.session import default_cpus
+
 
 class CdcEnvelopeDataSource(DataSource):
     """``spark.read.format("cdc_envelope").option("path", dir)`` over a
-    JSON-line topic directory written by ``write_cdc_json_files`` —
+    JSON-line topic directory written by ``write_cdc_topic`` —
     batch AND streaming (``spark.readStream.format("cdc_envelope")``):
     the streaming side tracks a replayable offset
     (``{"files_read": n}``) exactly like a consumer-group position, so
@@ -90,10 +92,6 @@ _MIN_SPLIT_BYTES = 1 << 20
 _MAX_SPLIT_BYTES = 64 << 20
 
 
-def _target_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-
-
 def _topic_files(path: str) -> list[str]:
     """Paths of the topic's ``part-*`` files in partition order."""
     return sorted(
@@ -118,7 +116,7 @@ def _file_splits(data: bytes, split_bytes: int):
         cuts.append(nl + 1)
         pos = nl + 1 + split_bytes
     cuts.append(size)
-    # the topic format never writes blank lines (write_cdc_json_files /
+    # the topic format never writes blank lines (write_cdc_topic /
     # CdcEnvelopeWriter emit "\n"-joined non-empty JSON), so the prefix
     # count is the newline count; the split() fallback stays exact if a
     # foreign file ever violates that
@@ -145,8 +143,7 @@ class CdcEnvelopeReader(DataSourceReader):
             raise ValueError("cdc_envelope requires option 'path'")
         self._path = path
         self._partition_pred = None  # (op, value) pruning on `partition`
-        # 0/unset → derive from topic size and target parallelism;
-        # negative → disable splitting (legacy one-partition-per-file)
+        # 0/unset → derive from topic size and target parallelism
         self._split_bytes = int(options.get("split_bytes", "0"))
 
     def pushFilters(self, filters):
@@ -188,14 +185,12 @@ class CdcEnvelopeReader(DataSourceReader):
         if self._partition_pred is not None:
             op, v = self._partition_pred
             paths = [(i, p) for i, p in paths if op(i, v)]
-        if self._split_bytes < 0:
-            return [InputPartition((i, p, None, None, 0)) for i, p in paths]
         sizes = {p: os.path.getsize(p) for _, p in paths}
         split_bytes = self._split_bytes or min(
             _MAX_SPLIT_BYTES,
             max(
                 _MIN_SPLIT_BYTES,
-                -(-sum(sizes.values()) // _target_parallelism()),
+                -(-sum(sizes.values()) // default_cpus()),
             ),
         )
         parts = []
@@ -313,7 +308,7 @@ class CdcEnvelopeWriter(DataSourceArrowWriter):
     deletes staging — so a failed/speculated task never leaves
     readable output, the same all-or-nothing story as
     write-audit-publish (operators/maintenance.py). Output is
-    byte-compatible with ``write_cdc_json_files``' topic layout, so
+    byte-compatible with ``write_cdc_topic``' topic layout, so
     the connector's own readers (batch + stream) consume it.
 
     Arrow variant (round 13, guide §4): rows arrive as

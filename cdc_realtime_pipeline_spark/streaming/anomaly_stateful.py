@@ -41,15 +41,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from cdc_realtime_pipeline_spark.operators.anomaly import (
     _EMA_ALPHA,
-    _LARGE_DEFAULT,
-    _LARGE_T0,
-    _LARGE_T1,
+    _LARGE_TIERS,
     _RAPID_COUNT,
     _RAPID_WINDOW_MS,
-    _SPIKE_DEFAULT,
-    _SPIKE_T0,
+    _SPIKE_TIERS,
     _SURGE_MIN_SAMPLES,
     _SURGE_MULT,
+    _tier,
 )
 
 ALERT_OUT_SCHEMA = T.StructType(
@@ -74,22 +72,14 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _large_threshold(market: str) -> float:
+def _threshold(tiers: tuple[float, ...], market: str) -> float:
     # per-market tiers (AnomalyDetector.java:182-186); numeric keys use
     # the fixture's %3 tiering so batch analogs agree.
     try:
         key = int(market.split("-")[-1])
     except (ValueError, IndexError):
-        return _LARGE_DEFAULT
-    return (_LARGE_T0, _LARGE_T1, _LARGE_DEFAULT)[key % 3]
-
-
-def _spike_threshold(market: str) -> float:
-    try:
-        key = int(market.split("-")[-1])
-    except (ValueError, IndexError):
-        return _SPIKE_DEFAULT
-    return _SPIKE_T0 if key % 3 == 0 else _SPIKE_DEFAULT
+        return tiers[-1]
+    return _tier(tiers, key)
 
 
 def detect_anomalies_batch_of_key(
@@ -102,8 +92,8 @@ def detect_anomalies_batch_of_key(
     """
     alerts: list[dict] = []
     pdf = pdf.sort_values("sequential_id")
-    lt = _large_threshold(market)
-    spt = _spike_threshold(market)
+    lt = _threshold(_LARGE_TIERS, market)
+    spt = _threshold(_SPIKE_TIERS, market)
     for row in pdf.itertuples(index=False):
         price = float(row.trade_price)
         vol = float(row.trade_volume)

@@ -234,20 +234,21 @@ def run_alert_stream(
     return start_query(writer, synchronous)
 
 
-def write_sorted_at_rest(df: DataFrame, out_dir: str, month_col: str = "month") -> None:
+def write_sorted_at_rest(df: DataFrame, out_dir: str) -> None:
     """O4: MergeTree's ``ORDER BY (market, ts, id)`` physical sort-key
-    layout (clickhouse/init.sql:26) — month partitions with rows sorted
-    within each file so parquet row-group min/max stats give the same
-    range-scan locality MergeTree's primary index does."""
+    layout (clickhouse/init.sql:26) — partitions by ``df``'s ``month``
+    column, with rows sorted within each file so parquet row-group
+    min/max stats give the same range-scan locality MergeTree's
+    primary index does."""
     # month leads the sort so the writer's required ordering (partition
     # columns first) is already satisfied — otherwise FileFormatWriter
     # inserts its own non-stable sort by month and scrambles the
     # secondary keys.
     (
-        df.repartition(F.col(month_col))
-        .sortWithinPartitions(month_col, "market", "upbit_timestamp", "trade_id")
+        df.repartition(F.col("month"))
+        .sortWithinPartitions("month", "market", "upbit_timestamp", "trade_id")
         .write.mode("overwrite")
-        .partitionBy(month_col)
+        .partitionBy("month")
         .parquet(out_dir)
     )
 

@@ -56,7 +56,7 @@ from cdc_realtime_pipeline_spark.operators.window_agg import (
 )
 from cdc_realtime_pipeline_spark.sources.cdc_file_source import (
     read_cdc_stream,
-    write_cdc_json_files,
+    write_cdc_topic,
 )
 from cdc_realtime_pipeline_spark.streaming.anomaly_stateful import apply_anomaly_detector
 from cdc_realtime_pipeline_spark.streaming.job import (
@@ -90,7 +90,7 @@ def _cdc_topic(spark: SparkSession, sf_dir: str, variant: str = "plain") -> str:
             scratch_dir("cdc_topics"),
             f"{variant}_{abs(hash(sf_dir)) % 10**8:08d}",
         )
-        write_cdc_json_files(synthesize_cdc_json_from_events(events), out)
+        write_cdc_topic(synthesize_cdc_json_from_events(events), out)
         _TOPIC_CACHE[key] = out
     return _TOPIC_CACHE[key]
 
@@ -662,13 +662,10 @@ def stream_anomaly_rule_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream_cdc_parse shares the batch round-trip oracle.
 from cdc_realtime_pipeline_spark.operators.anomaly import (  # noqa: E402
     _EMA_ALPHA,
-    _LARGE_DEFAULT,
-    _LARGE_T0,
-    _LARGE_T1,
+    _LARGE_TIERS,
     _RAPID_COUNT,
     _RAPID_WINDOW_MS,
-    _SPIKE_DEFAULT,
-    _SPIKE_T0,
+    _SPIKE_TIERS,
     _SURGE_MIN_SAMPLES,
     _SURGE_MULT,
 )
@@ -765,11 +762,11 @@ WITH RECURSIVE ins AS (
          CAST(json_extract_string(props, '$.k') AS DOUBLE) AS vol,
          value * CAST(json_extract_string(props, '$.k') AS DOUBLE) AS amount,
          epoch_ms(ts) AS tms,
-         CAST(CASE WHEN user_id % 3 = 0 THEN {_LARGE_T0}
-                   WHEN user_id % 3 = 1 THEN {_LARGE_T1}
-                   ELSE {_LARGE_DEFAULT} END AS DOUBLE) AS large_theta,
-         CAST(CASE WHEN user_id % 3 = 0 THEN {_SPIKE_T0}
-                   ELSE {_SPIKE_DEFAULT} END AS DOUBLE) AS spike_theta,
+         CAST(CASE WHEN user_id % 3 = 0 THEN {_LARGE_TIERS[0]}
+                   WHEN user_id % 3 = 1 THEN {_LARGE_TIERS[1]}
+                   ELSE {_LARGE_TIERS[2]} END AS DOUBLE) AS large_theta,
+         CAST(CASE WHEN user_id % 3 = 0 THEN {_SPIKE_TIERS[0]}
+                   ELSE {_SPIKE_TIERS[1]} END AS DOUBLE) AS spike_theta,
          row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn
   FROM events
   WHERE event_type <> 'error'

@@ -14,7 +14,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     from cdc_realtime_pipeline_spark.session import get_spark
 
-    spark = get_spark("tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("tests", cpus=8)
     yield spark
 
 

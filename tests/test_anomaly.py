@@ -10,10 +10,10 @@ import pandas as pd
 
 from cdc_realtime_pipeline_spark.operators.anomaly import (
     _EMA_ALPHA,
-    _LARGE_T0,
+    _LARGE_TIERS,
     _RAPID_COUNT,
     _RAPID_WINDOW_MS,
-    _SPIKE_T0,
+    _SPIKE_TIERS,
     _SURGE_MIN_SAMPLES,
     _SURGE_MULT,
 )
@@ -41,20 +41,20 @@ def _run(rows, market="M-0", st=None):
 
 
 def test_large_trade_threshold_boundary():
-    # market M-0 → tier 0 threshold (_LARGE_T0); fire at ≥, not below
-    under = _run([(1, 1, 10.0, 1.0, _LARGE_T0 - 0.01, 1000)])[0]
-    at = _run([(1, 1, 10.0, 1.0, _LARGE_T0, 1000)])[0]
+    # market M-0 → tier 0 threshold (_LARGE_TIERS[0]); fire at ≥, not below
+    under = _run([(1, 1, 10.0, 1.0, _LARGE_TIERS[0] - 0.01, 1000)])[0]
+    at = _run([(1, 1, 10.0, 1.0, _LARGE_TIERS[0], 1000)])[0]
     assert not [a for a in under if a["alert_type"] == "LARGE_TRADE"]
     hits = [a for a in at if a["alert_type"] == "LARGE_TRADE"]
-    assert len(hits) == 1 and hits[0]["threshold"] == _LARGE_T0
+    assert len(hits) == 1 and hits[0]["threshold"] == _LARGE_TIERS[0]
 
 
 def test_price_spike_vs_previous_event():
     # 2% threshold for tier-0 markets; second event +exactly threshold
     rows = [
         (1, 1, 100.0, 1.0, 0.0, 1000),
-        (2, 2, 100.0 * (1 + _SPIKE_T0), 1.0, 0.0, 2000),  # fires
-        (3, 3, 100.0 * (1 + _SPIKE_T0) * 1.001, 1.0, 0.0, 3000),  # small move, no fire
+        (2, 2, 100.0 * (1 + _SPIKE_TIERS[0]), 1.0, 0.0, 2000),  # fires
+        (3, 3, 100.0 * (1 + _SPIKE_TIERS[0]) * 1.001, 1.0, 0.0, 3000),  # small move, no fire
     ]
     alerts, st = _run(rows)
     spikes = [a for a in alerts if a["alert_type"] == "PRICE_SPIKE"]
@@ -103,14 +103,14 @@ def test_rapid_trades_window_reset():
 def test_state_carries_across_micro_batches():
     # PRICE_SPIKE must see the previous batch's last price
     alerts1, st = _run([(1, 1, 100.0, 1.0, 0.0, 1000)])
-    alerts2, _ = _run([(2, 2, 100.0 * (1 + _SPIKE_T0), 1.0, 0.0, 2000)], st=st)
+    alerts2, _ = _run([(2, 2, 100.0 * (1 + _SPIKE_TIERS[0]), 1.0, 0.0, 2000)], st=st)
     assert [a["trade_id"] for a in alerts2 if a["alert_type"] == "PRICE_SPIKE"] == [2]
 
 
 def test_rows_sorted_by_sequential_id_before_rules():
     # out-of-order arrival within a micro-batch is re-sequenced
     rows = [
-        (2, 2, 100.0 * (1 + _SPIKE_T0), 1.0, 0.0, 2000),
+        (2, 2, 100.0 * (1 + _SPIKE_TIERS[0]), 1.0, 0.0, 2000),
         (1, 1, 100.0, 1.0, 0.0, 1000),
     ]
     alerts, _ = _run(rows)

@@ -50,7 +50,7 @@ def test_compaction_preserves_rows(spark, sf_dir, tmp_path):
     out = _partitioned_table(spark, sf_dir, tmp_path)
     part = os.path.join(out, "month=202401")
     before = spark.read.parquet(part).count()
-    n_files = compact_partition(spark, out, "202401", target_files=1)
+    n_files = compact_partition(spark, out, "202401")
     assert n_files >= 1
     after_files = [f for f in os.listdir(part) if f.endswith(".parquet")]
     assert len(after_files) == 1

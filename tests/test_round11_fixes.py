@@ -191,7 +191,7 @@ def test_tfidf_memo_matches_inline_definition(spark, sf_dir):
 
 def test_minhash_sigs_memo_matches_inline_definition(spark, sf_dir):
     """``_minhash_sigs16`` must equal
-    ``minhash_signatures(docs_with_dupes(...), 16)`` exactly — the
+    ``minhash_signatures(docs_with_dupes(...))`` exactly — the
     shared signature table the whole MinHash family now consumes."""
     from cdc_realtime_pipeline_spark.operators.dedup import (
         _minhash_sigs16,
@@ -199,7 +199,7 @@ def test_minhash_sigs_memo_matches_inline_definition(spark, sf_dir):
         minhash_signatures,
     )
 
-    inline = minhash_signatures(docs_with_dupes(spark, sf_dir), 16)
+    inline = minhash_signatures(docs_with_dupes(spark, sf_dir))
     memo = _minhash_sigs16(spark, sf_dir)
     assert memo.columns == inline.columns
     assert memo.exceptAll(inline).count() == 0

@@ -40,11 +40,12 @@ def test_datasource_byte_range_splits_preserve_kafka_contract(tmp_path):
     )
 
     topic, lines0, _ = _mk_topic(tmp_path)
-    legacy = CdcEnvelopeReader({"path": topic, "split_bytes": "-1"})
+    # a split size past either file's size reads each file whole
+    whole = CdcEnvelopeReader({"path": topic, "split_bytes": str(1 << 20)})
     split = CdcEnvelopeReader({"path": topic, "split_bytes": "64"})
-    assert len(legacy.partitions()) == 2
+    assert len(whole.partitions()) == 2
     assert len(split.partitions()) > 2  # files really were cut
-    got, want = _drain(split), _drain(legacy)
+    got, want = _drain(split), _drain(whole)
     assert sorted(got) == sorted(want)
     by_part: dict[int, list] = {}
     for v, _sf, pidx, off in got:
@@ -52,6 +53,21 @@ def test_datasource_byte_range_splits_preserve_kafka_contract(tmp_path):
     # offsets dense per file, values in file order — the Kafka contract
     assert sorted(o for o, _ in by_part[0]) == list(range(100))
     assert [v for _, v in sorted(by_part[0])] == lines0
+
+
+@pytest.mark.parametrize("cpus", ["0", ""])
+def test_datasource_partitions_when_cpus_means_all_cores(
+    tmp_path, monkeypatch, cpus
+):
+    """``SPARK_GRAFT_CPUS`` of ``0`` or empty means every core for the
+    reader's derived split size, as it does for ``get_spark``."""
+    from cdc_realtime_pipeline_spark.sources.cdc_python_datasource import (
+        CdcEnvelopeReader,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+    topic, _, _ = _mk_topic(tmp_path)
+    assert len(CdcEnvelopeReader({"path": topic}).partitions()) == 2
 
 
 def test_datasource_split_reader_still_prunes_pushed_partitions(tmp_path):
@@ -147,9 +163,9 @@ def test_hampel_sliced_frames_match_unsliced(spark, sf_dir, monkeypatch):
     chunking with ±H overlap is pure parallelism. The slice path is
     volume-gated off at fixture scale, so force it on here; the direct
     form it must equal is the oracle-gated production path."""
-    monkeypatch.setenv("SPARK_GRAFT_HAMPEL_SLICE_ROWS", "0")
     from pyspark.sql import Window
 
+    from cdc_realtime_pipeline_spark.operators import timeseries
     from cdc_realtime_pipeline_spark.operators.timeseries import (
         _HAMPEL_C,
         _HAMPEL_HALF,
@@ -159,6 +175,7 @@ def test_hampel_sliced_frames_match_unsliced(spark, sf_dir, monkeypatch):
     )
     from cdc_realtime_pipeline_spark.session import load_table
 
+    monkeypatch.setattr(timeseries, "_HAMPEL_SLICE_ROWS", 0)
     got = [tuple(r) for r in value_hampel_filter(spark, sf_dir).collect()]
 
     ev = load_table(spark, sf_dir, "events")

@@ -27,7 +27,7 @@ def test_python_datasource_kafka_contract(spark, sf_dir):
     topic = _cdc_topic(spark, sf_dir, "plain")
     raw = spark.read.format("cdc_envelope").option("path", topic).load()
     rows = raw.collect()
-    # one partition per topic file, written as 4 by write_cdc_json_files
+    # one partition per topic file, written as 4 by write_cdc_topic
     parts = {r.partition for r in rows}
     assert parts == set(range(4))
     # offsets are the dense within-partition sequence, Kafka-style

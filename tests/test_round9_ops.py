@@ -297,7 +297,7 @@ def test_lsh_band_sweep_s_curve(spark, sf_dir):
         assert r["r_rows"] * r["b_bands"] == 16
         assert r["n_hit"] <= min(r["n_candidates"], r["n_truth"])
 
-    sig = minhash_signatures(docs_with_dupes(spark, sf_dir), 16)
+    sig = minhash_signatures(docs_with_dupes(spark, sf_dir))
     cap_fires = {}
     for rows_per_band, bands in _LSH_SWEEP_CONFIGS:
         stacked = sig.select(

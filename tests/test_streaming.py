@@ -19,7 +19,7 @@ from cdc_realtime_pipeline_spark.operators.window_agg import merge_trade_partial
 from cdc_realtime_pipeline_spark.sources.cdc_file_source import (
     read_cdc_batch,
     read_cdc_stream,
-    write_cdc_json_files,
+    write_cdc_topic,
 )
 from cdc_realtime_pipeline_spark.streaming.job import (
     compact_batches,
@@ -39,7 +39,7 @@ from cdc_realtime_pipeline_spark.streaming.mv import (
 def _make_stream(spark, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events")
     d = str(tmp_path / "cdc_in")
-    write_cdc_json_files(synthesize_cdc_json_from_events(events), d)
+    write_cdc_topic(synthesize_cdc_json_from_events(events), d)
     return d, events.count()
 
 
@@ -187,7 +187,7 @@ def test_stateful_alert_stream_recovers_state_across_restart(spark, sf_dir, tmp_
 
     def _stage(df, tag):
         d = str(tmp_path / f"half_{tag}")
-        write_cdc_json_files(synthesize_cdc_json_from_events(df), d)
+        write_cdc_topic(synthesize_cdc_json_from_events(df), d)
         for i, f in enumerate(sorted(os.listdir(d))):
             if not f.startswith("part-"):
                 continue
@@ -206,7 +206,7 @@ def test_stateful_alert_stream_recovers_state_across_restart(spark, sf_dir, tmp_
     out2 = str(tmp_path / "alerts_once")
     ck2 = str(tmp_path / "alerts_onceck")
     oneshot_dir = str(tmp_path / "oneshot_src")
-    write_cdc_json_files(synthesize_cdc_json_from_events(events), oneshot_dir)
+    write_cdc_topic(synthesize_cdc_json_from_events(events), oneshot_dir)
     run_alert_stream(spark, oneshot_dir, out2, ck2)
     oneshot = {
         (r["market"], r["alert_type"], r["trade_id"])

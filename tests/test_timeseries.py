@@ -206,11 +206,11 @@ def test_gap_fill_locf_persist_gate_is_result_identical(
     """The volume-gated persist (round 14 — the hampel #19 discipline)
     must be a pure plan-shape switch: forcing the persist path on the
     fixture (gate at 1 row) yields exactly the ungated result."""
-    from cdc_realtime_pipeline_spark.operators.timeseries import gap_fill_locf
+    from cdc_realtime_pipeline_spark.operators import timeseries
 
-    monkeypatch.setenv("SPARK_GRAFT_LOCF_PERSIST_ROWS", str(10**12))
-    plain = gap_fill_locf(spark, sf_dir).collect()
-    monkeypatch.setenv("SPARK_GRAFT_LOCF_PERSIST_ROWS", "1")
-    forced = gap_fill_locf(spark, sf_dir).collect()
+    monkeypatch.setattr(timeseries, "_LOCF_PERSIST_ROWS", 10**12)
+    plain = timeseries.gap_fill_locf(spark, sf_dir).collect()
+    monkeypatch.setattr(timeseries, "_LOCF_PERSIST_ROWS", 1)
+    forced = timeseries.gap_fill_locf(spark, sf_dir).collect()
     key = lambda r: (r["market"], r["bucket"])  # noqa: E731
     assert sorted(plain, key=key) == sorted(forced, key=key)

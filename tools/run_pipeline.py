@@ -33,7 +33,7 @@ def main() -> None:
     from cdc_realtime_pipeline_spark.session import get_spark, load_table
     from cdc_realtime_pipeline_spark.sources.cdc_file_source import (
         read_cdc_stream,
-        write_cdc_json_files,
+        write_cdc_topic,
     )
     from cdc_realtime_pipeline_spark.streaming.job import (
         read_merged_trade_agg,
@@ -48,7 +48,7 @@ def main() -> None:
     stream_dir = os.path.join(out, "topic")
     ckpt = os.path.join(out, "checkpoints")
     events = load_table(spark, sf_dir, "events")
-    write_cdc_json_files(synthesize_cdc_json_from_events(events), stream_dir)
+    write_cdc_topic(synthesize_cdc_json_from_events(events), stream_dir)
     print(f"[1/4] CDC topic materialized: {events.count()} change events → {stream_dir}")
 
     run_cdc_fanout(spark, stream_dir, out, ckpt)
