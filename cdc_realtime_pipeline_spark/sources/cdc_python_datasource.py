@@ -51,7 +51,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from cdc_realtime_pipeline_spark.session import default_cpus
+from cdc_realtime_pipeline_spark.session import default_cpus, set_worker_pythonpath
 
 
 class CdcEnvelopeDataSource(DataSource):
@@ -367,11 +367,14 @@ def register(spark) -> None:
     queries from a thread pool) intermittently fails the
     in-flight ``save()``. A flag on the session object itself (not its
     ``id``, which a later session can reuse) plus a module-level lock
-    makes repeat calls free and first calls race-safe."""
+    makes repeat calls free and first calls race-safe. The pickled
+    class carries the session's Python worker path, so that is set
+    first."""
     if getattr(spark, _REGISTERED_ATTR, False):
         return
     with _REGISTER_LOCK:
         if getattr(spark, _REGISTERED_ATTR, False):
             return
+        set_worker_pythonpath(spark)
         spark.dataSource.register(CdcEnvelopeDataSource)
         setattr(spark, _REGISTERED_ATTR, True)

@@ -1135,8 +1135,13 @@ def stream_cdc_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full Kafka-consumer emulation this image can run: the
     ``cdc_envelope`` format's SimpleDataSourceStreamReader tracks a
     replayable files-consumed offset in the query's offset log
-    (consumer-group position), availableNow drains to the latest
-    offset, and the unchanged parse path runs on ``value``. Third
+    (consumer-group position), and the unchanged parse path runs on
+    ``value``. The query asks for availableNow, but Spark's Python
+    stream source does not support that trigger (``PythonMicroBatchStream``
+    is a ``MicroBatchStream`` with ``AcceptsLatestSeenOffset``, not
+    ``SupportsTriggerAvailableNow``), so Spark falls back to one batch
+    up to the latest offset. The topic is fully landed before the
+    query starts, so that one batch holds all of it. Third
     oracle-sharing leg of the round-trip: JVM batch text
     (`cdc_roundtrip`), JVM text stream (`stream_cdc_parse`), and this
     bespoke-connector stream must all hash identically."""

@@ -5,13 +5,19 @@ from __future__ import annotations
 import sys
 import threading
 import time
+import types
 
 
 class _StubSession:
     """Stands in for a SparkSession: ``dataSource.register`` counts calls
-    on the class, so a stub instance holds no state of its own."""
+    on the class, so a stub instance holds no count of its own; its
+    ``sparkContext.environment`` takes the worker path ``register``
+    sets."""
 
     registrations = 0
+
+    def __init__(self) -> None:
+        self.sparkContext = types.SimpleNamespace(environment={})
 
     @property
     def dataSource(self):

@@ -388,6 +388,53 @@ def test_partials_compact_while_queries_run(spark, sf_dir, tmp_path):
     assert _sink_totals(spark, out, mv_dir) == (n_events,) * 3
 
 
+# more paths than Spark's default parallel-listing threshold (32)
+_MANY_FILES = 40
+
+
+def _widest_stage(spark, group):
+    """The most tasks any stage of the jobs in job group ``group`` ran."""
+    # job and stage infos arrive through the listener bus
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs
+    return max(
+        tracker.getStageInfo(s).numTasks for j in jobs for s in tracker.getJobInfo(j).stageIds
+    )
+
+
+def test_backlog_drain_lists_its_files_without_a_job(spark, sf_dir, tmp_path):
+    # a drain over more change files than the threshold lists them on
+    # the driver, not through a one-task-per-file Spark job
+    events = load_table(spark, sf_dir, "events")
+    stream_dir = str(tmp_path / "cdc_in")
+    synthesize_cdc_json_from_events(events).repartition(_MANY_FILES).write.text(stream_dir)
+    assert sum(f.startswith("part-") for f in os.listdir(stream_dir)) == _MANY_FILES
+    out = str(tmp_path / "out")
+
+    q = run_cdc_fanout(spark, stream_dir, out, str(tmp_path / "ckpt"))
+    assert spark.read.parquet(os.path.join(out, "crypto_trades")).count() == events.count()
+    assert _widest_stage(spark, q.runId) < _MANY_FILES
+
+
+def test_read_batches_lists_its_batches_without_a_job(spark, tmp_path):
+    table = str(tmp_path / "partials")
+    spark.range(_MANY_FILES).withColumn("batch", F.col("id")).write.partitionBy(
+        "batch"
+    ).parquet(table)
+    for i in range(_MANY_FILES):  # each batch committed by its own writer
+        open(os.path.join(table, f"batch={i}", "_SUCCESS"), "w").close()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("read_batches_listing", "read_batches over many batches")
+    try:
+        assert read_batches(spark, table).count() == _MANY_FILES
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _widest_stage(spark, "read_batches_listing") < _MANY_FILES
+
+
 def test_fanout_ingest_time_mode(spark, sf_dir, tmp_path):
     """W1 strict-parity mode: processing/ingestion-time windows (the
     reference ran processing time, no watermarks). Non-deterministic by
