@@ -33,7 +33,6 @@ from cdc_realtime_pipeline_spark.operators.lsh_common import derive_bands
 from cdc_realtime_pipeline_spark.session import (
     load_table,
     memo_persist,
-    register_session_cache,
     tracked_persist,
 )
 
@@ -367,21 +366,16 @@ def minhash_band_geometry(
     return r, derive_bands(j_tau**r, _MH_MISS_TARGET, _MH_MAX_BANDS)
 
 
-# corpus doc count per sf_dir for the derived backstop geometry — the
-# BASE documents parquet count (metadata-only job), cached for the
-# session and registered so release_memos() clears it. The planted
-# dupes add ~23% on top; the geometry consumes log(n), so the
-# undercount shifts the derived R by < 0.1 — irrelevant, and the base
-# count avoids materializing the dupes plan just to size it.
-_DOCS_COUNT_CACHE: dict[str, int] = register_session_cache({})
-
-
 def _docs_count(spark: SparkSession, sf_dir: str) -> int:
-    n = _DOCS_COUNT_CACHE.get(sf_dir)
-    if n is None:
-        n = load_table(spark, sf_dir, "documents").count()
-        _DOCS_COUNT_CACHE[sf_dir] = n
-    return n
+    """Corpus doc count for the derived backstop geometry — the BASE
+    documents parquet count (metadata-only job), once per session
+    memo. The planted dupes add ~23% on top; the geometry consumes
+    log(n), so the undercount shifts the derived R by < 0.1 —
+    irrelevant, and the base count avoids materializing the dupes plan
+    just to size it."""
+    return memo_persist(
+        "docs_count", spark, sf_dir, lambda: load_table(spark, sf_dir, "documents").count()
+    )
 
 
 def _shingle_candidates(

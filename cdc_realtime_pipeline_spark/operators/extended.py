@@ -7,13 +7,20 @@ explicit, oracle-gated, and scale-shaped).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cdc_realtime_pipeline_spark.session import load_table, tracked_persist
+from cdc_realtime_pipeline_spark.session import (
+    load_table,
+    memo_persist,
+    scratch_dir,
+    tracked_persist,
+)
 
 SESSION_GAP_MIN = 30
 
@@ -1222,8 +1229,6 @@ def file_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     string round-trip distinguishably, so equality with the parquet
     ground truth doesn't depend on the fixture containing neither.
     """
-    from cdc_realtime_pipeline_spark.session import scratch_dir
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
     base = scratch_dir("fmt_roundtrip")
     docs.write.mode("overwrite").json(base + "/jsonl")
@@ -1845,8 +1850,6 @@ def _basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     both market-basket consumers (`copurchase_pairs_topk`,
     `market_basket_rules`) key every stage on (round 13, guide §5:
     the `neardup_candidates` discipline applied to baskets)."""
-    from cdc_realtime_pipeline_spark.session import memo_persist
-
     return memo_persist(
         "basket_items",
         spark,
@@ -1863,8 +1866,6 @@ def _basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket queries (copurchase ranks it raw; market_basket_rules
     filters c_ab ≥ 2 and joins marginals). Built from the
     `basket_items` memo so the distinct pass is shared too."""
-    from cdc_realtime_pipeline_spark.session import memo_persist
-
     def build() -> DataFrame:
         items = _basket_items(spark, sf_dir)
         a = items.select("l_orderkey", F.col("l_partkey").alias("p_a"))
@@ -1953,8 +1954,6 @@ def _journey_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     `events_entropy_rate` each re-ran privately (round 13, guide §5:
     the tfidf_weights discipline). Everything downstream of this memo
     operates on the ≤ |types|²-row relation."""
-    from cdc_realtime_pipeline_spark.session import memo_persist
-
     def build() -> DataFrame:
         ev = load_table(spark, sf_dir, "events").select(
             "user_id", "event_type", "ts", "event_id"
@@ -2747,13 +2746,10 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ``merge`` hint pins the bucketed SMJ path even where AQE
     would broadcast the small side at test scale — at production
     scale neither side broadcasts, and the bucketed plan is the one
-    under test. Tables are written once per (session, SF) and reused;
-    results are oracle-gated against the raw parquet, proving the
-    bucketed layout is a pure physical change.
+    under test. Tables are written once per session memo, named from
+    the full fixture path; results are oracle-gated against the raw
+    parquet, proving the bucketed layout is a pure physical change.
     """
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    t_orders = f"sg_bkt_orders_{tag}"
-    t_lineitem = f"sg_bkt_lineitem_{tag}"
 
     def _clear_stale(table: str) -> None:
         # the in-memory catalog dies with the session but the managed
@@ -2767,32 +2763,33 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
         shutil.rmtree(os.path.join(wh, table), ignore_errors=True)
 
-    if not spark.catalog.tableExists(t_orders):
-        _clear_stale(t_orders)
-        (
+    def build() -> tuple[str, str]:
+        # two fixture roots with the same basename get their own tables
+        tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+        tables = []
+        for name, key, cols in (
             # round 13 (guide §2.3 project-before-write / §6): the
             # rollup reads only (o_orderkey, o_orderpriority), so the
             # bucketed table stores only those — same bucketed-join
             # plan, ~1/5 the write+scan bytes
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderpriority")
-            .write.bucketBy(_BKT_N, "o_orderkey")
-            .sortBy("o_orderkey")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(t_orders)
-        )
-    if not spark.catalog.tableExists(t_lineitem):
-        _clear_stale(t_lineitem)
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_extendedprice", "l_discount")
-            .write.bucketBy(_BKT_N, "l_orderkey")
-            .sortBy("l_orderkey")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(t_lineitem)
-        )
+            ("orders", "o_orderkey", ("o_orderkey", "o_orderpriority")),
+            ("lineitem", "l_orderkey", ("l_orderkey", "l_extendedprice", "l_discount")),
+        ):
+            table = f"sg_bkt_{name}_{tag}"
+            _clear_stale(table)
+            (
+                load_table(spark, sf_dir, name)
+                .select(*cols)
+                .write.bucketBy(_BKT_N, key)
+                .sortBy(key)
+                .mode("overwrite")
+                .format("parquet")
+                .saveAsTable(table)
+            )
+            tables.append(table)
+        return tuple(tables)
+
+    t_orders, t_lineitem = memo_persist("bucketed_tables", spark, sf_dir, build)
     li = spark.table(t_lineitem).hint("merge")
     orders = spark.table(t_orders)
     joined = li.join(
@@ -2831,15 +2828,12 @@ GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority
 # Dynamic partition pruning: the scan that never reads filtered-out days
 # --------------------------------------------------------------------------
 
-_DPP_WRITTEN: set = set()
-
-
 def dynamic_partition_pruning_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-to-dim join where the dim-side filter prunes the FACT
     scan's partitions at runtime — Spark's dynamic partition pruning
     (DPP), the mechanism that turns "join 100 TB of day-partitioned
     events to a filtered calendar" into "read only the qualifying
-    days". The fact table is written once per (session, SF)
+    days". The fact table is written once per session memo,
     partitioned by day; the calendar dim carries a Monday flag
     (defined as datediff from 2024-01-01, a Monday — weekday
     NUMBERING differs across engines, date arithmetic doesn't), and
@@ -2854,12 +2848,9 @@ def dynamic_partition_pruning_join(spark: SparkSession, sf_dir: str) -> DataFram
     arithmetic, proving the partitioned rewrite is physically
     transparent.
     """
-    from cdc_realtime_pipeline_spark.session import scratch_dir
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    base = scratch_dir("dpp") + "/" + tag
-    ev = load_table(spark, sf_dir, "events")
-    if tag not in _DPP_WRITTEN:
+    def build() -> str:
+        base = tempfile.mkdtemp(dir=scratch_dir("dpp"))
+        ev = load_table(spark, sf_dir, "events")
         (
             # cluster by the partition column before the partitioned
             # write (round 13, guide §6 small-files): without it every
@@ -2882,7 +2873,9 @@ def dynamic_partition_pruning_join(spark: SparkSession, sf_dir: str) -> DataFram
             .write.mode("overwrite")
             .parquet(base + "/dim")
         )
-        _DPP_WRITTEN.add(tag)
+        return base
+
+    base = memo_persist("dpp_tables", spark, sf_dir, build)
     fact = spark.read.parquet(base + "/fact")
     dim = spark.read.parquet(base + "/dim").filter(F.col("is_monday") == 1)
     return (

@@ -29,7 +29,6 @@ from cdc_realtime_pipeline_spark.operators.lsh_common import derive_bands
 from cdc_realtime_pipeline_spark.session import (
     load_table,
     memo_persist,
-    register_session_cache,
     tracked_persist,
 )
 
@@ -472,21 +471,14 @@ _LSH_TARGET_BUCKET = 256  # expected unrelated-pair band-bucket size cap
 # banded-LSH regime (use exact=True or a lower-τ family like MinHash).
 _LSH_MAX_BANDS = 4096
 
-# corpus count per sf_dir, cached for the session — a parquet count()
-# is metadata-only (no row materialization) but still a job, so pay it
-# once per fixture, not once per dedup_embeddings_cosine call;
-# registered so release_memos() clears it with the other
-# static-fixture state (a fixture-rewriting tool must not serve a
-# stale count into the derived geometry)
-_EMB_COUNT_CACHE: dict[str, int] = register_session_cache({})
-
-
 def _corpus_count(spark: SparkSession, sf_dir: str) -> int:
-    n = _EMB_COUNT_CACHE.get(sf_dir)
-    if n is None:
-        n = load_table(spark, sf_dir, "embeddings").count()
-        _EMB_COUNT_CACHE[sf_dir] = n
-    return n
+    """Embeddings corpus count, once per session memo — a parquet
+    count() is metadata-only (no row materialization) but still a job,
+    so pay it once per fixture, not once per dedup_embeddings_cosine
+    call."""
+    return memo_persist(
+        "emb_count", spark, sf_dir, lambda: load_table(spark, sf_dir, "embeddings").count()
+    )
 
 
 def lsh_band_geometry(

@@ -69,10 +69,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
         .config(
@@ -200,81 +197,63 @@ def release_caches() -> int:
     return n
 
 
-# Session-scoped materialized intermediates — shared subplans several
-# QUERIES build on (the near-dup shingle/candidate tables). Unlike
-# tracked_persist, these SURVIVE release_caches(), so a session running
-# the whole registry (bench, correctness sweep, the driver) pays for
-# each shared stage once instead of once per consuming query. Bounded
-# by construction: one entry per slot, keyed by (session, sf_dir) —
-# a new session or a different fixture dir releases and rebuilds.
-_MEMOIZED: dict[str, tuple[int, str, object]] = {}
+# The one per-session cache: intermediates several QUERIES build on
+# (the near-dup shingle/candidate tables, corpus counts, synthesized
+# CDC topics, the detector's sink table, written scratch tables).
+# Unlike tracked_persist, entries SURVIVE release_caches(), so a
+# session running the whole registry (correctness sweep, the driver)
+# pays for each shared stage once instead of once per consuming query.
+# Bounded by construction: one entry per slot, keyed by the session
+# object and the full fixture path — a new session or a different
+# fixture dir releases and rebuilds.
+_MEMOIZED: dict[str, tuple[SparkSession, str, object]] = {}
 # serializes memo_persist's check-build-store, so threads racing on a
 # cold slot build it once; re-entrant because a build may read
 # another memo
 _MEMO_LOCK = threading.RLock()
 
-# Scalar/side caches that ride the same static-fixture assumption as
-# the memos (e.g. similarity's embeddings-count cache feeding the
-# derived LSH geometry). Operator modules REGISTER their cache dicts
-# here at import time so release_memos() clears them without the
-# session layer importing operator modules (round-12 review: the
-# dependency must point operator → session, not the reverse).
-_SESSION_CACHES: list[dict] = []
 
-
-def register_session_cache(cache: dict) -> dict:
-    """Register a module-level cache dict to be cleared by
-    ``release_memos()``. Returns the dict so it can be used inline:
-    ``_MY_CACHE = register_session_cache({})``."""
-    _SESSION_CACHES.append(cache)
-    return cache
+def _unpersist(value) -> None:
+    if hasattr(value, "unpersist"):
+        try:
+            value.unpersist()
+        except Exception:  # previous session already stopped
+            pass
 
 
 def memo_persist(slot: str, spark, sf_dir: str, build):
-    """Return the memoized persisted DataFrame for ``slot`` at
-    ``sf_dir``, building (and persisting) it on first use per
-    (session, sf_dir). ``build`` is a zero-arg callable.
+    """Return the value memoized for ``slot``, calling the zero-arg
+    ``build`` on first use per (session, ``sf_dir``). A value with a
+    ``persist()`` (a DataFrame) is persisted; counts, paths and table
+    names are kept as they are.
 
     STATIC-FIXTURE ASSUMPTION (ADVICE r8): entries survive
     release_caches() by design and are never invalidated on
     underlying-data change — the fixture dirs are immutable for the
-    life of a session (the driver/bench/test contract). Any tool that
+    life of a session (the driver/test contract). Any tool that
     REWRITES a fixture dir mid-session must call release_memos()
-    afterwards or memoized shingle/candidate/PQ tables will serve
-    stale results."""
-    sid = id(spark)
+    afterwards or memoized tables, counts and topics will serve stale
+    results."""
     with _MEMO_LOCK:
         cur = _MEMOIZED.get(slot)
-        if cur is not None and cur[0] == sid and cur[1] == sf_dir:
+        if cur is not None and cur[0] is spark and cur[1] == sf_dir:
             return cur[2]
         if cur is not None:
-            try:
-                cur[2].unpersist()
-            except Exception:  # previous session already stopped
-                pass
-        df = build()
-        df.persist()
-        _MEMOIZED[slot] = (sid, sf_dir, df)
-        return df
+            _unpersist(cur[2])
+        value = build()
+        if hasattr(value, "persist"):
+            value.persist()
+        _MEMOIZED[slot] = (spark, sf_dir, value)
+        return value
 
 
-def release_memos() -> int:
-    """Unpersist every memoized intermediate (test/maintenance hook)."""
-    n = 0
-    for key in list(_MEMOIZED):
-        _, _, df = _MEMOIZED.pop(key)
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    # registered scalar caches ride the same static-fixture assumption
-    # as the memos — a tool that rewrites a fixture dir mid-session
-    # (scale_probe._build) must not serve stale values (e.g. a stale
-    # embeddings count into the derived LSH geometry)
-    for cache in _SESSION_CACHES:
-        cache.clear()
-    return n
+def release_memos() -> None:
+    """Drop every memoized value, unpersisting the DataFrames
+    (test/maintenance hook)."""
+    with _MEMO_LOCK:
+        for _, _, value in _MEMOIZED.values():
+            _unpersist(value)
+        _MEMOIZED.clear()
 
 
 # Per-session scratch directories, one per tag, removed at interpreter

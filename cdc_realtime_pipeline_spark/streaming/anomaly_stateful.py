@@ -181,9 +181,17 @@ def apply_anomaly_detector(parsed: DataFrame) -> DataFrame:
     """parsed CDC events (stream or batch-shaped) → alert stream.
 
     Insert-only filter first (op='c', CdcPipelineJob.java:80), then
-    keyed stateful processing.
+    keyed stateful processing over only the columns the rules read.
     """
-    inserts = parsed.filter(F.col("op") == "c")
+    inserts = parsed.filter(F.col("op") == "c").select(
+        "market",
+        "trade_id",
+        "trade_price",
+        "trade_volume",
+        "trade_amount",
+        "upbit_timestamp",
+        "sequential_id",
+    )
     return inserts.groupBy("market").applyInPandasWithState(
         _detector,
         outputStructType=ALERT_OUT_SCHEMA,

@@ -223,8 +223,8 @@ def run_alert_stream(
 ):
     """Start the stateful alert query (Stream 2, CdcPipelineJob.java:80-87)."""
     alerts_dir = os.path.join(out_base, "anomaly_alerts")
-    parsed = _with_event_time(parse_cdc_events(read_cdc_stream(spark, stream_dir)))
-    alerts = apply_anomaly_detector(parsed)
+    # the rules order by sequential_id and read upbit_timestamp, not ts
+    alerts = apply_anomaly_detector(parse_cdc_events(read_cdc_stream(spark, stream_dir)))
     writer = (
         alerts.writeStream.format("parquet")
         .option("path", alerts_dir)

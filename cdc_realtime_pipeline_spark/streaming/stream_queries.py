@@ -32,8 +32,8 @@ from cdc_realtime_pipeline_spark.cdc.envelope import (
 from cdc_realtime_pipeline_spark.session import (
     convert_ns_timestamps,
     load_table,
+    memo_persist,
     raw_schema,
-    register_session_cache,
     scratch_dir,
 )
 from cdc_realtime_pipeline_spark.operators import curation as _curation_oracles
@@ -67,18 +67,15 @@ from cdc_realtime_pipeline_spark.streaming.job import (
     start_query,
 )
 
-# Synthesized CDC "topic" directories, keyed by (sf_dir, variant) —
-# the fixture is immutable within a session, so the JSON encode +
-# write happens once per variant instead of once per query invocation
-# (ADVICE r2 temp-dir leak + the bench creep on the CDC pair). Dirs
-# live under a session scratch root and are removed at exit;
-# release_memos() clears the cache, so the next call rewrites them.
-_TOPIC_CACHE: dict[tuple[str, str], str] = register_session_cache({})
-
-
 def _cdc_topic(spark: SparkSession, sf_dir: str, variant: str = "plain") -> str:
-    key = (sf_dir, variant)
-    if key not in _TOPIC_CACHE:
+    """The synthesized CDC "topic" directory for ``variant``, written
+    once per session memo: the fixture is immutable within a session,
+    so the JSON encode + write happens once per variant instead of once
+    per query invocation. Each build writes a fresh directory under the
+    session scratch root (removed at exit), because a query may return
+    a lazy read of an earlier one."""
+
+    def build() -> str:
         events = load_table(spark, sf_dir, "events")
         if variant == "dupes":
             # 10% replayed rows — the dedup queries' duplicate feed
@@ -86,13 +83,10 @@ def _cdc_topic(spark: SparkSession, sf_dir: str, variant: str = "plain") -> str:
         elif variant == "apply":
             # the batch apply/SCD2 queries' update log, shares their oracles
             events = update_log_events(events)
-        out = os.path.join(
-            scratch_dir("cdc_topics"),
-            f"{variant}_{abs(hash(sf_dir)) % 10**8:08d}",
-        )
-        write_cdc_topic(synthesize_cdc_json_from_events(events), out)
-        _TOPIC_CACHE[key] = out
-    return _TOPIC_CACHE[key]
+        out = os.path.join(scratch_dir("cdc_topics"), f"{variant}_{uuid.uuid4().hex[:8]}")
+        return write_cdc_topic(synthesize_cdc_json_from_events(events), out)
+
+    return memo_persist(f"cdc_topic_{variant}", spark, sf_dir, build)
 
 
 def _src_bytes(paths) -> int:
@@ -552,13 +546,6 @@ GROUP BY market, ws
 """
 
 
-# the detector's memory-sink table per sf_dir: the full stateful run
-# costs ~8 s, and two registered queries consume it (the rows-only
-# alert stream and its oracle-gated rule-count twin) — one streaming
-# execution per session serves both; release_memos() clears it
-_ALERTS_CACHE: dict[str, DataFrame] = register_session_cache({})
-
-
 def stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful anomaly detector over the synthesized CDC stream.
 
@@ -567,12 +554,18 @@ def stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-gated via ``stream_anomaly_rule_counts``);
     tests/test_streaming.py asserts rule-level equivalence against
     hand-computed fixtures.
+
+    The full stateful run costs ~8 s and two registered queries consume
+    it (this one and its oracle-gated rule-count twin), so one
+    streaming execution per session memo serves both.
     """
-    if sf_dir not in _ALERTS_CACHE:
-        parsed = parse_cdc_events(read_cdc_stream(spark, _cdc_topic(spark, sf_dir)))
-        alerts = apply_anomaly_detector(parsed)
-        _ALERTS_CACHE[sf_dir] = _memory_sink(alerts, "append", src=_cdc_topic(spark, sf_dir))
-    return _ALERTS_CACHE[sf_dir]
+
+    def build() -> DataFrame:
+        topic = _cdc_topic(spark, sf_dir)
+        alerts = apply_anomaly_detector(parse_cdc_events(read_cdc_stream(spark, topic)))
+        return _memory_sink(alerts, "append", src=topic)
+
+    return memo_persist("stream_anomaly_alerts", spark, sf_dir, build)
 
 
 def _drained_update_log(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -209,18 +209,3 @@ def test_banded_cosine_bits_only_override_matches_exact(spark, sf_dir):
     assert key(dedup_embeddings_cosine(spark, sf_dir, bits=10)) == key(
         dedup_embeddings_cosine(spark, sf_dir, exact=True)
     )
-
-
-def test_release_memos_clears_registered_session_caches():
-    """The embeddings-count cache is registered with the session layer
-    (not hard-coded there): release_memos() must clear it so
-    fixture-rewriting tools can't serve a stale count into the
-    derived geometry."""
-    from cdc_realtime_pipeline_spark.operators.similarity import (
-        _EMB_COUNT_CACHE,
-    )
-    from cdc_realtime_pipeline_spark.session import release_memos
-
-    _EMB_COUNT_CACHE["/tmp/fake_dir"] = 12345
-    release_memos()
-    assert "/tmp/fake_dir" not in _EMB_COUNT_CACHE
