@@ -209,3 +209,23 @@ def test_banded_cosine_bits_only_override_matches_exact(spark, sf_dir):
     assert key(dedup_embeddings_cosine(spark, sf_dir, bits=10)) == key(
         dedup_embeddings_cosine(spark, sf_dir, exact=True)
     )
+
+
+def test_release_memos_clears_registered_session_caches(spark, sf_dir):
+    """The embeddings count is a session memo slot: release_memos()
+    must drop it so fixture-rewriting tools can't serve a stale count
+    into the derived geometry."""
+    from cdc_realtime_pipeline_spark.operators.similarity import _corpus_count
+    from cdc_realtime_pipeline_spark.session import (
+        load_table,
+        memo_persist,
+        release_memos,
+    )
+
+    release_memos()
+    memo_persist("emb_count", spark, sf_dir, lambda: 12345)  # a stale count
+    assert _corpus_count(spark, sf_dir) == 12345
+    release_memos()
+    assert _corpus_count(spark, sf_dir) == (
+        load_table(spark, sf_dir, "embeddings").count()
+    )

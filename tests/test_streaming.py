@@ -484,6 +484,24 @@ def test_stream_topk_per_window_board_invariants(spark, sf_dir):
             assert a.n > b.n or (a.n == b.n and a.event_type < b.event_type)
 
 
+def test_release_memos_clears_stream_caches(spark, sf_dir):
+    # the synthesized topics and the detector output are session memo
+    # slots on the same static-fixture assumption: release_memos() must
+    # drop them so the next call rebuilds instead of re-serving
+    from cdc_realtime_pipeline_spark import session
+    from cdc_realtime_pipeline_spark.streaming.stream_queries import _cdc_topic
+
+    session.release_memos()
+    session.memo_persist("cdc_topic_plain", spark, sf_dir, lambda: "fake_topic")
+    session.memo_persist("stream_anomaly_alerts", spark, sf_dir, lambda: None)
+    assert _cdc_topic(spark, sf_dir) == "fake_topic"
+    session.release_memos()
+    assert "cdc_topic_plain" not in session._MEMOIZED
+    assert "stream_anomaly_alerts" not in session._MEMOIZED
+    topic = _cdc_topic(spark, sf_dir)
+    assert topic != "fake_topic" and os.listdir(topic)
+
+
 def test_stream_merged_trade_agg_leaves_no_temp_dir(spark, sf_dir):
     # sinks and checkpoint live under the session scratch root, not in
     # a fresh mkdtemp per call
